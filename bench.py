@@ -605,7 +605,9 @@ def write_bench_md(result: dict) -> None:
         "serialized fetch slots; the slot window carries only",
         "(host, id)), then 88 (added: skew_top_keys, the actionable",
         "hot-key listing beside skew_stats — same one key-count",
-        "aggregate, heap top-N). The final 86-query suite run measured the first",
+        "aggregate, heap top-N). The suite is now 88 queries; the last",
+        "recorded suite run was at 86 queries, so frontier_schedule and",
+        "skew_top_keys have no recorded timings. That run measured the first",
         "nine r5-final adds cheap at sf0.1: bloom_ingest 0.89 s,",
         "site_quality 0.94 s, encoding_audit 0.29 s, compaction_plan",
         "0.37 s, robots_gate 3.8 s (overhead-dominated at toy scale —",

@@ -197,17 +197,15 @@ def main() -> None:
         lin = lake.read_lineage()
         if lin is None:
             print("no lineage yet")
-            return
-        lin.groupBy("run_id", "status").count().orderBy("run_id", "status").show(50, False)
-        from pyspark.errors import AnalysisException
-
-        try:
-            spark.read.parquet(lake.metrics).orderBy("run_id").show(50, False)
-        except AnalysisException:
-            # only the missing-table case is benign; a corrupt or
-            # unreadable metrics table must surface (the
-            # lineage.count_summary stance), not print nothing
+        else:
+            lin.groupBy("run_id", "status").count().orderBy("run_id", "status").show(50, False)
+        # metrics are a view over the completed lineage rows; a metrics/
+        # directory left by an older lake is ignored
+        met = lake.read_metrics()
+        if met is None or met.isEmpty():
             print("no metrics yet")
+        else:
+            met.orderBy("run_id").show(50, False)
 
 
 if __name__ == "__main__":

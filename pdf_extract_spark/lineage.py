@@ -10,18 +10,20 @@ main.py:996-1017).  Our distributed equivalent:
     ``pmod(xxhash64(doc_id), n_buckets)`` — the distributed analog of the
     reference's fixed page-batch (utils.py:40-106): deterministic,
     content-addressed, independent of row order or partition count;
-  * extraction runs bucket-group by bucket-group; each group commits its
-    output partition **atomically** (dynamic partition overwrite — the
-    parquet-lake stand-in for Iceberg's ``MERGE INTO`` /
+  * extraction runs bucket-group by bucket-group; each group is ONE job
+    that commits its output partition **atomically** (dynamic partition
+    overwrite — the parquet-lake stand-in for Iceberg's ``MERGE INTO`` /
     ``overwritePartitions``; on an Iceberg catalog the same code takes
-    ``.writeTo(tbl).overwritePartitions()``) and then appends
-    ``completed`` lineage rows;
+    ``.writeTo(tbl).overwritePartitions()``) and counts docs/spans per
+    bucket on the way (``Observation``), then ONE small write appends
+    the ``completed`` lineage rows carrying those counts;
   * **resume** anti-joins the documents table against completed lineage
     buckets (``left_anti``), so a killed job re-extracts only
     unfinished buckets, and re-running a half-written bucket simply
     overwrites that bucket's partition — idempotent end state;
-  * a ``metrics`` table records per-group docs/sec + span counts
-    (reference analog: ``extraction_stats`` / ``batch_summary_stats``,
+  * metrics (per-group docs/sec + span counts) are a view over the
+    completed lineage rows, ``Lake.read_metrics`` — no table (reference
+    analog: ``extraction_stats`` / ``batch_summary_stats``,
     database.py:96-125).
 
 At 10^12 documents the lineage table stays tiny (n_buckets rows per run);
@@ -35,7 +37,8 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+import pandas as pd
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
 
 from pdf_extract_spark.operators.extract import extract_documents
 from pdf_extract_spark.pipeline import partition_for_extraction
@@ -82,7 +85,7 @@ class RunReport:
 
 
 class Lake:
-    """The extraction lake: documents/spans_out/lineage/metrics.
+    """The extraction lake: spans_out/lineage, plus the metrics view.
 
     ``table_format`` selects the storage dispatch:
       * ``"parquet"`` (default) — ``root`` is a directory; the per-group
@@ -107,7 +110,7 @@ class Lake:
         self.root = root.rstrip("/")
         self.spans_out = f"{self.root}{sep}spans_out"
         self.lineage = f"{self.root}{sep}lineage"
-        self.metrics = f"{self.root}{sep}metrics"
+        self.metrics = f"{self.root}{sep}metrics"  # older lakes' table; unused
 
     # ------------------------------------------------------------- sinks
 
@@ -131,6 +134,9 @@ class Lake:
             )
 
     def _append(self, rows: list, schema: T.StructType, target: str) -> None:
+        # a pandas frame takes the Arrow path (enabled by build_spark): a
+        # list of tuples would cost a pickled-RDD Python job per append
+        rows = pd.DataFrame.from_records(rows, columns=schema.fieldNames())
         df = self.spark.createDataFrame(rows, schema=schema).coalesce(1)
         if self.table_format == "iceberg":
             if self.spark.catalog.tableExists(target):
@@ -169,6 +175,28 @@ class Lake:
         if self.table_format == "iceberg":
             return self.spark.table(self.spans_out)
         return self.spark.read.parquet(self.spans_out)
+
+    def read_metrics(self) -> DataFrame | None:
+        """Per-group metrics (``METRICS_WRITE`` columns) as a view over
+        the completed lineage rows: one group's rows share ``run_id`` and
+        ``started_at``. None before the first lineage write."""
+        lin = self.read_lineage()
+        if lin is None:
+            return None
+        done = lin.filter(F.col("status") == COMPLETED)
+        per_group = done.groupBy("run_id", "started_at").agg(
+            F.array_join(F.sort_array(F.collect_list("bucket")).cast("array<string>"), ",")
+            .alias("bucket_group"),
+            F.sum("doc_count").alias("doc_count"),
+            F.sum("span_count").alias("span_count"),
+            (F.max("completed_at") - F.col("started_at")).alias("secs"),
+        )
+        rate = F.col("doc_count") / F.greatest("secs", F.lit(1e-9))
+        return per_group.select(
+            "run_id", F.lit("extract").alias("stage"), "bucket_group",
+            F.round(rate, 3).alias("docs_per_sec"), "doc_count", "span_count",
+            F.round("secs", 3).alias("processing_time_s"),
+        )
 
 
 def _latest_status() -> F.Column:
@@ -283,86 +311,50 @@ def _process_group(
     lake: Lake, docs: DataFrame, run_id: str, group: list[int],
     n_buckets: int, num_partitions: int | None, report: RunReport,
 ) -> None:
-    """Extract + commit ONE bucket group, append its lineage/metrics rows,
-    fold the counts into ``report`` (shared by the resume loop and
+    """Extract + commit ONE bucket group, append its lineage rows, fold
+    the counts into ``report`` (shared by the resume loop and
     retry_bucket). A failure anywhere in the group (extraction, commit,
-    stats) best-effort-appends FAILED lineage rows carrying the error
-    message — so `cli.py count` can report failed buckets (the
+    lineage write) best-effort-appends FAILED lineage rows carrying the
+    error message — so `cli.py count` can report failed buckets (the
     reference's pending/failed parity, database.py:76-93) — and then
     re-raises; the next resume re-extracts the group (failed is not
     completed)."""
     t0 = time.time()
+    group = [int(b) for b in group]
     try:
-        _process_group_body(lake, docs, run_id, group, n_buckets,
-                            num_partitions, report, t0)
+        sub = docs.filter(F.col("bucket").isin(group))
+        parted = partition_for_extraction(sub, num_partitions)
+        out = extract_documents(parted.select("doc_id", "spans", "bucket"))
+        # extract_documents projects (doc_id, spans); re-derive the bucket
+        # column (deterministic function of doc_id) for partitioned commit.
+        out = out.withColumn("bucket", bucket_of(F.col("doc_id"), n_buckets))
+        # count per bucket inside the commit job, so the lineage rows need
+        # no second pass over spans_out
+        obs, bucket = Observation(), F.col("bucket")
+        lake.commit_spans(out.observe(obs, *[
+            agg for b in group for agg in (
+                F.sum(F.when(bucket == b, 1)).alias(f"docs_{b}"),
+                F.sum(F.when(bucket == b, F.size("spans"))).alias(f"spans_{b}"),
+            )
+        ]))
+        counts = obs.get  # blocks until the observed action ran: read only after the commit
+        t1 = time.time()
+        rows = [(run_id, b, COMPLETED, int(counts[f"docs_{b}"] or 0),
+                 int(counts[f"spans_{b}"] or 0), t0, t1, None) for b in group]
+        lake._append(rows, LINEAGE_WRITE, lake.lineage)
     except Exception as e:
         try:
             lake._append(
-                [(run_id, int(b), FAILED, None, None, t0, time.time(),
+                [(run_id, b, FAILED, None, None, t0, time.time(),
                   f"{type(e).__name__}: {e}"[:500]) for b in group],
                 LINEAGE_WRITE, lake.lineage,
             )
         except Exception:
             pass  # the lake itself is down: the original error matters more
         raise
-
-
-def _process_group_body(
-    lake: Lake, docs: DataFrame, run_id: str, group: list[int],
-    n_buckets: int, num_partitions: int | None, report: RunReport,
-    t0: float,
-) -> None:
-    sub = docs.filter(F.col("bucket").isin([int(b) for b in group]))
-    parted = partition_for_extraction(sub, num_partitions)
-    out = extract_documents(parted.select("doc_id", "spans", "bucket"))
-    # extract_documents projects (doc_id, spans); re-derive the bucket
-    # column (deterministic function of doc_id) for partitioned commit.
-    out = out.withColumn("bucket", bucket_of(F.col("doc_id"), n_buckets))
-    lake.commit_spans(out)
-
-    stats = (
-        lake.read_spans_out()
-        .filter(F.col("bucket").isin([int(b) for b in group]))
-        .groupBy("bucket")
-        .agg(F.count("*").alias("docs"), F.sum(F.size("spans")).alias("spans"))
-    ).collect()
-    t1 = time.time()
-    by_bucket = {r["bucket"]: (r["docs"], r["spans"]) for r in stats}
-    lineage_rows = [
-        (
-            run_id,
-            int(b),
-            COMPLETED,
-            int(by_bucket.get(b, (0, 0))[0]),
-            int(by_bucket.get(b, (0, 0))[1] or 0),
-            t0,
-            t1,
-            None,
-        )
-        for b in group
-    ]
-    lake._append(lineage_rows, LINEAGE_WRITE, lake.lineage)
-    g_docs = sum(v[0] for v in by_bucket.values())
-    g_spans = sum(int(v[1] or 0) for v in by_bucket.values())
-    lake._append(
-        [
-            (
-                run_id,
-                "extract",
-                ",".join(str(b) for b in group),
-                round(g_docs / max(t1 - t0, 1e-9), 3),
-                g_docs,
-                g_spans,
-                round(t1 - t0, 3),
-            )
-        ],
-        METRICS_WRITE,
-        lake.metrics,
-    )
-    report.buckets_processed.extend(int(b) for b in group)
-    report.doc_count += g_docs
-    report.span_count += g_spans
-
+    report.buckets_processed.extend(group)
+    report.doc_count += sum(r[3] for r in rows)
+    report.span_count += sum(r[4] for r in rows)
 
 
 def retry_bucket(

@@ -727,7 +727,11 @@ def _robots_grouped(
     ).select(
         host_col, "_ln", "_clean",
         F.lower(F.trim(F.substring_index(F.col("_clean"), ":", 1))).alias("_field"),
-        F.trim(F.expr("substring(_clean, instr(_clean, ':') + 1)")).alias("_value"),
+        # a colon-less line has no value (not the whole line), as in the twin
+        F.when(
+            F.instr("_clean", ":") > 0,
+            F.trim(F.expr("substring(_clean, instr(_clean, ':') + 1)")),
+        ).otherwise("").alias("_value"),
     )
     is_ua = F.col("_field") == "user-agent"
     flagged = parsed.select(

@@ -48,8 +48,14 @@ def test_full_run_matches_oracle(spark, docs_df, tmp_path):
     assert lin.filter(lin.status == "completed").select("bucket").distinct().count() == len(
         report.buckets_processed
     )
-    met = spark.read.parquet(lake.metrics)
+    from pdf_extract_spark.lineage import METRICS_WRITE
+
+    met = lake.read_metrics()
+    assert met.columns == METRICS_WRITE.fieldNames()
     assert met.count() > 0 and met.agg({"doc_count": "sum"}).first()[0] == N_DOCS
+    groups = [[int(b) for b in r["bucket_group"].split(",")] for r in met.collect()]
+    assert all(g == sorted(g) for g in groups)
+    assert sorted(b for g in groups for b in g) == sorted(report.buckets_processed)
 
 
 @pytest.mark.parametrize("kill_after", [0, 1, 3])
@@ -152,7 +158,7 @@ class _FakeV2Writer:
 def test_iceberg_dispatch_seam(spark, monkeypatch):
     """table_format='iceberg' must route through writeTo verbs: first
     commit creates the bucket-partitioned table, subsequent commits use
-    overwritePartitions; lineage/metrics appends use append(). No Iceberg
+    overwritePartitions; lineage appends use append(). No Iceberg
     jars in this container, so the verbs are recorded through a fake
     DataFrameWriterV2 — the parquet branch is covered end-to-end by the
     kill/resume tests above."""
@@ -393,3 +399,91 @@ def test_retry_bucket_genuinely_empty_is_a_truthful_noop(spark, docs_df, tmp_pat
         retry_bucket(
             lake, thin.limit(0), run_id="r3", bucket=3, n_buckets=N_BUCKETS
         )
+
+
+def test_observed_counts_match_readback(spark, docs_df, tmp_path):
+    """The per-bucket counts the commit observes equal a read-back of
+    spans_out after a crash + resume and retries — including a retry of
+    a genuinely empty bucket, which records 0/0."""
+    from pyspark.sql import functions as F
+
+    from pdf_extract_spark.lineage import bucket_of, retry_bucket
+
+    thin = docs_df.filter(bucket_of(F.col("doc_id"), N_BUCKETS) != 3)
+    lake = Lake(spark, str(tmp_path / "lake"))
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_extraction_with_lineage(
+            lake, thin, run_id="r1", n_buckets=N_BUCKETS,
+            group_size=GROUP, fail_after_groups=1,
+        )
+    run_extraction_with_lineage(
+        lake, thin, run_id="r2", n_buckets=N_BUCKETS, group_size=GROUP
+    )
+    target = int(lake.read_spans_out().select("bucket").first()["bucket"])
+    retry_bucket(lake, thin, run_id="r3", bucket=target, n_buckets=N_BUCKETS)
+    retry_bucket(lake, thin, run_id="r4", bucket=3, n_buckets=N_BUCKETS)
+
+    lin = lake.read_lineage()
+    latest = (
+        lin.filter(lin.status == "completed")
+        .groupBy("bucket")
+        .agg(F.max_by(F.struct("doc_count", "span_count"), "completed_at").alias("c"))
+    )
+    observed = {r["bucket"]: (r["c"]["doc_count"], r["c"]["span_count"])
+                for r in latest.collect()}
+    readback = {
+        r["bucket"]: (r["d"], r["s"])
+        for r in lake.read_spans_out().groupBy("bucket").agg(
+            F.count("*").alias("d"), F.sum(F.size("spans")).alias("s")).collect()
+    }
+    assert observed[3] == (0, 0) and 3 not in readback
+    assert set(readback) <= set(observed)
+    assert observed == {b: readback.get(b, (0, 0)) for b in observed}
+    assert sum(d for d, _ in observed.values()) == thin.count()
+
+
+def test_crash_between_commit_and_lineage_write(spark, docs_df, tmp_path, monkeypatch):
+    """The one crash window left inside a group: its spans are committed
+    but its completed lineage rows never land. The group must stay
+    uncompleted, and resume re-extracts exactly that group, overwriting
+    its partitions so every document is present once."""
+    from pyspark.sql import functions as F
+
+    from pdf_extract_spark.lineage import COMPLETED, bucket_of
+
+    buckets = sorted(r[0] for r in docs_df.select(
+        bucket_of(F.col("doc_id"), N_BUCKETS)).distinct().collect())
+    n_groups = -(-len(buckets) // GROUP)
+    real_append = Lake._append
+    completed_appends = {"n": 0}
+
+    def crash_on_last_group(self, rows, schema, target):
+        if rows and rows[0][2] == COMPLETED:
+            completed_appends["n"] += 1
+            if completed_appends["n"] == n_groups:
+                raise RuntimeError("simulated crash before the lineage write")
+        return real_append(self, rows, schema, target)
+
+    lake = Lake(spark, str(tmp_path / "lake"))
+    monkeypatch.setattr(Lake, "_append", crash_on_last_group)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        run_extraction_with_lineage(
+            lake, docs_df, run_id="r1", n_buckets=N_BUCKETS, group_size=GROUP
+        )
+    monkeypatch.setattr(Lake, "_append", real_append)
+
+    last_group = buckets[(n_groups - 1) * GROUP:]
+    done = {r["bucket"] for r in lake.completed_buckets_df().collect()}
+    assert done == set(buckets) - set(last_group)
+    # the window is real: the group's spans were committed
+    committed = {r["bucket"] for r in lake.read_spans_out().select("bucket").distinct().collect()}
+    assert set(last_group) <= committed
+
+    report = run_extraction_with_lineage(
+        lake, docs_df, run_id="r2", n_buckets=N_BUCKETS, group_size=GROUP
+    )
+    assert report.buckets_processed == last_group
+    golden = oracle.expected_corpus(generator.make_corpus(N_DOCS, seed=9))
+    assert _collect_spans(lake.read_spans_out()) == golden
+    out = lake.read_spans_out()
+    assert out.count() == out.select("doc_id").distinct().count() == N_DOCS

@@ -459,6 +459,37 @@ def test_robots_directives_semantics(spark):
     assert out["c.example"]["crawl_delay_milli"] is None
 
 
+def test_robots_directives_twins_agree_on_colonless_lines(spark):
+    """A bare 'Disallow' or 'Sitemap' line (no ':') carries no value in
+    either engine: the kernel once took the whole line as the value,
+    so a bare Sitemap counted as a sitemap in Spark only."""
+    import duckdb
+
+    from pdf_extract_spark.operators import weburl
+
+    rows = [
+        ("a.example", "User-agent: *\nDisallow\nSitemap\nCrawl-delay: 1"),
+        ("b.example", "Sitemap\nSitemap: https://b.example/s.xml\n"
+                      "User-agent: *\nDisallow"),
+        ("c.example", "User-agent\nDisallow\nSitemap  # bare"),
+    ]
+    got = sorted(
+        tuple(r) for r in weburl.robots_directives(
+            spark.createDataFrame(rows, "host string, robots string")
+        ).collect()
+    )
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (host VARCHAR, robots VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    want = sorted(
+        con.execute(weburl.robots_directives_sql("SELECT * FROM t")).fetchall()
+    )
+    assert got == want
+    out = {r[0]: r for r in got}
+    assert out["a.example"][4] == 0                 # bare Sitemap: none
+    assert out["b.example"][4:] == (1, "https://b.example/s.xml")
+
+
 def test_frontier_schedule_composes_gate_and_delay(spark):
     from pdf_extract_spark.operators import weburl
 
