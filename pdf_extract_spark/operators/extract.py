@@ -5,12 +5,10 @@ Replaces the reference's per-document LLM session loop
 with the deterministic rule core, executed as ONE map-only stage:
 
   * no explode, no shuffle — each document's span array is transformed in
-    place by an Arrow-batched pandas UDF (vectorized across documents;
-    sequential only *within* a document, which the sentence-FSM semantics
-    require anyway, cf. SURVEY.md §2.8);
-  * cleanup + boilerplate detection + tagging are pandas-vectorized inside
-    the batch (C-level regex over flattened spans), only the run-merge /
-    composition FSM walks fragments per document;
+    place by an Arrow-batched pandas UDF that maps rules.extract_document
+    over the documents of one Arrow batch (sequential only *within* a
+    document, which the sentence-FSM semantics require anyway, cf.
+    SURVEY.md §2.8), so kernel and golden oracle run the same code;
   * giant documents are bounded by spark.sql.execution.arrow.maxRecordsPerBatch
     so one Arrow batch never holds more than a few hundred documents.
 
@@ -28,126 +26,9 @@ from pdf_extract_spark import rules
 from pdf_extract_spark.schemas import SPANS
 
 
-def _extract_batch(spans_series: pd.Series) -> pd.Series:
-    """Vectorized batch extraction: Series[list[dict-span]] -> same shape.
-
-    Flattens the batch to one pandas frame, runs every regex cleanup and
-    the tagging classifier as vectorized column ops (shared compiled
-    patterns from rules.py), then walks each document once for the
-    run-merge + sentence-composition FSM.
-    """
-    docs = spans_series.tolist()
-    rows = []  # (batch_pos, kind, text, media_ref, offset)
-    for i, spans in enumerate(docs):
-        if spans is None:
-            continue
-        for s in spans:
-            rows.append((i, s["kind"], s["text"] or "", s["media_ref"] or "", s["offset"]))
-    out: list[list[dict] | None] = [[] for _ in docs]
-    if not rows:
-        return pd.Series([[] if d is not None else None for d in docs])
-
-    df = pd.DataFrame(rows, columns=["i", "kind", "text", "media_ref", "offset"])
-    df.sort_values(["i", "offset"], inplace=True, kind="mergesort")
-
-    # rules.tag_fragments semantics: kind == 'media' takes the media
-    # branch, kind == 'table' keeps its structural tag (cleanup + empty
-    # drop but NO boilerplate participation), anything else flows down
-    # the text path — boilerplate keys are counted over kind == 'text'
-    # spans strictly
-    kinds_in = df["kind"].to_numpy()
-    is_text = kinds_in == "text"
-    is_media = kinds_in == "media"
-    is_table = kinds_in == "table"
-
-    # one combined trigger scan decides which fragments need the full
-    # regex cleanup chain; for the (typical) clean majority — no dot
-    # leaders, bullets, stars, or whitespace beyond single spaces — every
-    # pass is identity except the final strip, so four sub passes over
-    # the whole batch collapse into one contains pass plus strips
-    # (equivalence pinned by the golden tests, whose oracle runs the
-    # UNvectorized rules chain)
-    dirty = df["text"].str.contains(rules.RE_CLEAN_TRIGGER, regex=True)
-
-    # --- boilerplate detection (rules.boilerplate_keys, vectorized) -----
-    collapsed = df["text"].str.strip()
-    if dirty.any():
-        collapsed.loc[dirty] = (
-            df.loc[dirty, "text"].str.replace(rules.RE_WS, " ", regex=True).str.strip()
-        )
-    # the length gate applies to the RAW text (rules.boilerplate_keys:
-    # `len(t) <= MAX` before collapsing), not the collapsed form; keys
-    # are COUNTED over kind=='text' short spans only, and the DROP
-    # applies to every non-media, non-table span whose collapsed text is
-    # a key (tag_fragments: `if collapse_ws(raw) in bp: continue`;
-    # table spans are structural and exempt)
-    short = df["text"].str.len() <= rules.BOILERPLATE_MAX_LEN
-    counted_mask = is_text & short & (collapsed != "")
-    counted = collapsed[counted_mask]
-    sizes = counted.groupby([df["i"][counted_mask], counted]).size()
-    keys = sizes[sizes >= rules.BOILERPLATE_MIN_REPEATS].index  # (i, key) pairs
-    if len(keys):
-        all_pairs = pd.MultiIndex.from_arrays([df["i"], collapsed])
-        bp_mask = pd.Series(all_pairs.isin(keys), index=df.index)
-    else:
-        bp_mask = pd.Series(False, index=df.index)
-
-    # --- cleanup: dot-leaders -> bullets -> '*' -> whitespace -----------
-    cleaned = df["text"].str.strip()
-    if dirty.any():
-        cleaned.loc[dirty] = (
-            df.loc[dirty, "text"]
-            .str.replace(rules.RE_DOT_LEADER, "", regex=True)
-            .str.replace(rules.RE_BULLET, "", regex=True)
-            .str.replace(rules.RE_STAR, " ", regex=True)
-            .str.replace(rules.RE_WS, " ", regex=True)
-            .str.strip()
-        )
-
-    keep = is_media | (((~bp_mask) | is_table) & (cleaned != ""))
-
-    # --- tagging (rules.tag_by_text, same precedence, vectorized) -------
-    h3 = cleaned.str.match(rules.RE_H3_COLON)
-    last_terminal = cleaned.str.endswith((".", "?", "!"))
-    many_words = cleaned.str.count(" ") + 1 > rules.MAX_HEADER_WORDS
-    h2 = cleaned.str.match(rules.RE_H2_NUM)
-    h1 = cleaned.str.match(rules.RE_H1_NUM) | cleaned.str.match(rules.RE_ALLCAPS)
-    eligible = (~h3) & (~last_terminal) & (~many_words)
-    tag = pd.Series("P", index=df.index)
-    tag[h3] = "H3"
-    tag[eligible & h2] = "H2"
-    tag[eligible & h1 & (~h2)] = "H1"
-    tag[is_table] = "table"
-    tag[is_media] = "media"
-
-    # --- per-document run-merge + composition FSM -----------------------
-    sub = df[keep]
-    kinds = tag[keep].to_numpy()
-    texts = cleaned[keep].to_numpy()
-    media = sub["media_ref"].to_numpy()
-    idx = sub["i"].to_numpy()
-
-    start = 0
-    n = len(idx)
-    while start < n:
-        end = start
-        cur = idx[start]
-        while end < n and idx[end] == cur:
-            end += 1
-        frags = [
-            {"kind": kinds[j], "text": "" if kinds[j] == "media" else texts[j],
-             "media_ref": media[j] if kinds[j] == "media" else ""}
-            for j in range(start, end)
-        ]
-        out[cur] = rules.compose_fragments(rules.merge_consecutive_tags(frags))
-        start = end
-
-    return pd.Series([o if docs[i] is not None else None for i, o in enumerate(out)])
-
-
 @pandas_udf(SPANS)
 def extract_spans(spans: pd.Series) -> pd.Series:
-    return _extract_batch(spans)
+    return spans.map(lambda s: rules.extract_document(s) if s is not None else None)
 
 
 def extract_documents(df):

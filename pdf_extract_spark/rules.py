@@ -72,10 +72,13 @@ BOILERPLATE_MIN_REPEATS = 3
 BOILERPLATE_MAX_LEN = 80
 
 # --------------------------------------------------------------------------
-# cleanup regexes (compiled once; shared with vectorized pandas .str ops)
+# cleanup regexes (compiled once)
 # --------------------------------------------------------------------------
 
 RE_WS = re.compile(r"\s+")  # C3, layout_analyzer.py:88
+# collapse_ws fast path trigger: RE_WS.sub(" ", t) changes t only if t has
+# a non-space whitespace char or a run of 2+ spaces
+RE_NEEDS_COLLAPSE = re.compile(r"[^\S ]| {2,}")
 RE_DOT_LEADER = re.compile(r"\.{5,}")  # C4, euaa_사례/pdf_to_json/main.py:33
 RE_BULLET = re.compile(r"^[-‐–—−·•○:.]\s*")  # C5, metadata_generator.py:524-526
 RE_STAR = re.compile(r"\*+")  # C5 second half, add_metadata.py:72-75
@@ -98,11 +101,12 @@ RE_ALLCAPS = re.compile(r"^[A-Z][A-Z0-9 ,'&\-]{2,}$")  # "EXECUTIVE SUMMARY"
 RE_H3_COLON = re.compile(r"^[^.?!]{1,60}:$")  # "Scope:" style run-in header
 MAX_HEADER_WORDS = 12
 
-# vectorized-cleanup fast path trigger (operators/extract.py): a fragment
-# needs the full cleanup chain only if it can contain a dot leader, a
-# leading bullet char, a star, or whitespace that collapse_ws would
-# change (any non-space whitespace, or a double space) — the alternation
-# is exactly the union of the four cleanup patterns' trigger conditions
+# clean_fragment fast path trigger: a fragment needs the full cleanup
+# chain only if it can contain a dot leader, a leading bullet char, a
+# star, or whitespace that collapse_ws would change (any non-space
+# whitespace, or a double space) — the alternation is exactly the union
+# of the four cleanup patterns' trigger conditions; on a miss every pass
+# is identity except the final strip
 RE_CLEAN_TRIGGER = re.compile(r"\.{5,}|\*|[^\S ]|  |^[-‐–—−·•○:.]")
 
 RE_SENT_BOUNDARY = re.compile(r"[.?!]+[\"')\]]*(?:\s+|$)")
@@ -120,6 +124,8 @@ RE_KOREAN = re.compile(r"[ㄱ-ㆎ가-힣]")  # C17, metadata_generator.py:383-42
 
 def collapse_ws(t: str) -> str:
     """C3 — whitespace collapse (layout_analyzer.py:88)."""
+    if not RE_NEEDS_COLLAPSE.search(t):
+        return t.strip()
     return RE_WS.sub(" ", t).strip()
 
 
@@ -149,6 +155,8 @@ def clean_fragment(t: str) -> str:
     Order matters and is part of the contract: dot-leaders first (they may
     create runs of whitespace), then bullet strip, then whitespace collapse.
     """
+    if not RE_CLEAN_TRIGGER.search(t):
+        return t.strip()
     return collapse_ws(strip_bullet(strip_dot_leaders(t)))
 
 
@@ -408,18 +416,11 @@ def is_complete(t: str, open_depth: int) -> bool:
     return bool(s) and s[-1] in TERMINALS
 
 
-RE_NEEDS_COLLAPSE = re.compile(r"[^\S ]| {2,}")  # any non-space ws, or 2+ spaces
-
-
 def _finalize_sentence(s: str) -> str:
-    """Cleanup rule with cheap guards: collapse_ws is a no-op when the
-    accumulated text came from pre-collapsed fragments joined by single
-    spaces, and bracket tightening only applies when brackets exist —
-    skip the regex-sub passes unless their trigger characters are present."""
-    if RE_NEEDS_COLLAPSE.search(s):
-        s = collapse_ws(s)
-    else:
-        s = s.strip()
+    """Cleanup rule: whitespace collapse, then bracket tightening — which
+    only applies when brackets exist, so its regex-sub passes are skipped
+    unless a bracket is present."""
+    s = collapse_ws(s)
     if "(" in s or "[" in s or ")" in s or "]" in s:
         s = tighten_brackets(s)
     return s
@@ -494,8 +495,12 @@ def tag_fragments(spans: list[dict]) -> list[dict]:
 
     Exposed separately so the giant-document split path can chunk AFTER
     tagging (safe split points are only knowable on tagged fragments) while
-    staying byte-identical to the single-pass path."""
-    ordered = sorted(spans, key=lambda s: s["offset"])
+    staying byte-identical to the single-pass path.
+
+    NULL span elements (legal: SPANS is an array with containsNull) are
+    dropped before ordering: they yield no fragment and count toward no
+    boilerplate key."""
+    ordered = sorted((s for s in spans if s is not None), key=lambda s: s["offset"])
     bp = boilerplate_keys([s["text"] or "" for s in ordered if s["kind"] == "text"])
 
     frags: list[dict] = []

@@ -300,15 +300,14 @@ def test_table_spans_skip_boilerplate_strip():
 
 
 def test_vectorized_kernel_matches_rules_on_table_spans():
-    """The Arrow kernel (_extract_batch) is a vectorized re-expression of
-    rules.tag_fragments — it must agree with the unvectorized chain on
-    structural table spans too (tag passthrough, boilerplate exemption,
-    cleanup + empty drop). This is the parity the first e2e probe caught
-    missing: rules handled 'table' while the kernel sent it down the
-    text path."""
+    """The Arrow kernel (extract_spans.func) maps rules.extract_document
+    over a Series of span lists — on structural table spans (tag
+    passthrough, boilerplate exemption, cleanup + empty drop) it must
+    equal the oracle, map a NULL document to NULL and an empty one to
+    []."""
     import pandas as pd
     from pdf_extract_spark import rules
-    from pdf_extract_spark.operators.extract import _extract_batch
+    from pdf_extract_spark.operators.extract import extract_spans
 
     mixed = [
         {"kind": "text", "text": "intro paragraph body text", "media_ref": "", "offset": 0},
@@ -326,7 +325,7 @@ def test_vectorized_kernel_matches_rules_on_table_spans():
         {"kind": "text", "text": "real body sentence text", "media_ref": "", "offset": 4},
     ]
     docs = [mixed, None, [], bp]
-    got = _extract_batch(pd.Series(docs)).tolist()
+    got = extract_spans.func(pd.Series(docs)).tolist()
     want = [rules.extract_document(d) if d is not None else None for d in docs]
     assert got == want
     assert [s["kind"] for s in got[0]] == ["P", "table", "table", "media", "P"]

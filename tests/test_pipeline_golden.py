@@ -13,12 +13,12 @@ N_DOCS = 80
 SEED = 42
 
 
+def _rows_spans(row) -> list[tuple]:
+    return [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in row["spans"]]
+
+
 def _collect_spans(df) -> dict[str, list[tuple]]:
-    rows = df.collect()
-    return {
-        r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]]
-        for r in rows
-    }
+    return {r["doc_id"]: _rows_spans(r) for r in df.collect()}
 
 
 def test_span_sequence_equality(spark):
@@ -55,11 +55,37 @@ def test_empty_and_media_only_documents(spark):
         {"doc_id": "d_blank", "spans": [
             {"kind": "text", "text": "   ", "media_ref": "", "offset": 0},
         ]},
+        # SPANS allows NULL elements: one between two spans is skipped
+        {"doc_id": "d_null_elem", "spans": [
+            {"kind": "text", "text": "First sentence.", "media_ref": "", "offset": 0},
+            None,
+            {"kind": "text", "text": "Second sentence.", "media_ref": "", "offset": 2},
+        ]},
+        {"doc_id": "d_null_fields", "spans": [
+            {"kind": "text", "text": None, "media_ref": None, "offset": 0},
+            {"kind": "media", "text": None, "media_ref": None, "offset": 1},
+            {"kind": "text", "text": "Kept sentence.", "media_ref": None, "offset": 2},
+        ]},
+    ]
+    # doc_id is not a key: two rows sharing one both come back
+    dups = [
+        {"doc_id": "d_dup", "spans": [
+            {"kind": "text", "text": "Row one.", "media_ref": "", "offset": 0},
+        ]},
+        {"doc_id": "d_dup", "spans": [
+            {"kind": "text", "text": "1. ROW TWO", "media_ref": "", "offset": 0},
+            {"kind": "media", "text": "", "media_ref": "m:d_dup:1", "offset": 1},
+        ]},
     ]
     golden = oracle.expected_corpus(docs)
-    df = spark.createDataFrame(docs, schema=DOCUMENTS)
-    got = _collect_spans(run_extraction(df))
+    df = spark.createDataFrame(docs + dups, schema=DOCUMENTS)
+    rows = run_extraction(df).collect()
+    got = {r["doc_id"]: _rows_spans(r) for r in rows if r["doc_id"] != "d_dup"}
     assert got == golden
     assert got["d_media"] == [("media", "", "m:d_media:1", 0), ("media", "", "m:d_media:2", 1)]
     assert got["d_empty"] == []
     assert got["d_blank"] == []
+    assert [t for _, t, _, _ in got["d_null_elem"]] == ["First sentence.", "Second sentence."]
+
+    got_dups = sorted(_rows_spans(r) for r in rows if r["doc_id"] == "d_dup")
+    assert got_dups == sorted(oracle.expected_corpus([d])["d_dup"] for d in dups)

@@ -108,10 +108,9 @@ def test_run_merge_preserves_order_and_nonheaders(frags_in):
 
 
 def test_clean_trigger_fast_path_equivalence():
-    """RE_CLEAN_TRIGGER soundness (the vectorized cleanup fast path): any
-    string NOT matching the trigger must pass the full cleanup chain
-    unchanged except for strip — otherwise the fast path would diverge
-    from rules.clean_fragment."""
+    """Soundness of the fast paths inside rules.clean_fragment and
+    rules.collapse_ws (strip-only when RE_CLEAN_TRIGGER / RE_NEEDS_COLLAPSE
+    miss): both must equal the unguarded regex chain on every string."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
@@ -120,10 +119,10 @@ def test_clean_trigger_fast_path_equivalence():
     @settings(max_examples=1500, deadline=None)
     @given(st.text(alphabet=st.characters(), max_size=50))
     def check(t):
-        if not rules.RE_CLEAN_TRIGGER.search(t):
-            assert rules.clean_fragment(t) == t.strip(), repr(t)
-        # and the chain itself is always well-defined
-        rules.clean_fragment(t)
+        chain = rules.RE_WS.sub(" ", rules.RE_STAR.sub(" ", rules.RE_BULLET.sub(
+            "", rules.RE_DOT_LEADER.sub("", t)))).strip()
+        assert rules.clean_fragment(t) == chain, repr(t)
+        assert rules.collapse_ws(t) == rules.RE_WS.sub(" ", t).strip(), repr(t)
 
     check()
 
@@ -153,16 +152,17 @@ def test_compose_inline_completion_equals_is_complete():
 
 
 def test_extract_batch_matches_rules_for_arbitrary_kinds():
-    """Kernel/oracle parity must hold for UNEXPECTED kind values too:
-    rules.tag_fragments sends only kind=='media' down the media branch —
-    any other kind takes the text path, and only kind=='text' counts
-    toward boilerplate keys."""
+    """The Arrow kernel (extract_spans.func) maps rules.extract_document
+    over a Series of span lists; its output must equal the oracle for
+    UNEXPECTED kind values too: rules.tag_fragments sends only
+    kind=='media' down the media branch — any other kind takes the text
+    path, and only kind=='text' counts toward boilerplate keys."""
     import pandas as pd
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
     from pdf_extract_spark import rules
-    from pdf_extract_spark.operators.extract import _extract_batch
+    from pdf_extract_spark.operators.extract import extract_spans
 
     span_st = st.fixed_dictionaries({
         "kind": st.sampled_from(["text", "media", "image", "x", ""]),
@@ -181,7 +181,7 @@ def test_extract_batch_matches_rules_for_arbitrary_kinds():
         docs = [
             [dict(s, offset=i) for i, s in enumerate(spans)] for spans in docs
         ]
-        got = _extract_batch(pd.Series(docs)).tolist()
+        got = extract_spans.func(pd.Series(docs)).tolist()
         exp = [rules.extract_document(spans) for spans in docs]
         assert got == exp, docs
 
@@ -191,11 +191,12 @@ def test_extract_batch_matches_rules_for_arbitrary_kinds():
 def test_boilerplate_drop_covers_uncounted_spans():
     """rules.tag_fragments drops ANY non-media span whose collapsed text
     is a boilerplate key — including spans that did NOT count toward the
-    keys (unknown kind, or raw length over the cap). Kernel must agree."""
+    keys (unknown kind, or raw length over the cap). The Arrow kernel
+    (extract_spans.func) must agree."""
     import pandas as pd
 
     from pdf_extract_spark import rules
-    from pdf_extract_spark.operators.extract import _extract_batch
+    from pdf_extract_spark.operators.extract import extract_spans
 
     hdr = "hdr line"
     docs = [
@@ -218,7 +219,7 @@ def test_boilerplate_drop_covers_uncounted_spans():
             {"kind": "text", "text": "Kept sentence.", "media_ref": "", "offset": 4},
         ],
     ]
-    got = _extract_batch(pd.Series(docs)).tolist()
+    got = extract_spans.func(pd.Series(docs)).tolist()
     exp = [rules.extract_document(spans) for spans in docs]
     assert got == exp
     assert [s["text"] for s in got[0]] == ["Real sentence."]
