@@ -41,10 +41,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
 
 from pdf_extract_spark.operators.extract import extract_documents
-from pdf_extract_spark.pipeline import partition_for_extraction
+from pdf_extract_spark.pipeline import bucket_of, partition_for_extraction
 
 COMPLETED = "completed"
 FAILED = "failed"
+# stored rows _validate_lake_scheme reads to detect a bucket-count mismatch
+SCHEME_SAMPLE_ROWS = 256
 
 LINEAGE_WRITE = T.StructType(
     [
@@ -211,10 +213,6 @@ def _latest_status() -> F.Column:
     return F.max_by("status", F.struct(F.col("completed_at"), rank))
 
 
-def bucket_of(doc_id_col: F.Column, n_buckets: int) -> F.Column:
-    return F.pmod(F.xxhash64(doc_id_col), F.lit(n_buckets)).cast("int")
-
-
 def run_extraction_with_lineage(
     lake: Lake,
     documents: DataFrame,
@@ -250,23 +248,24 @@ def run_extraction_with_lineage(
     return report
 
 
-def _validate_lake_scheme(lake: Lake, n_buckets: int, sample: int = 256) -> None:
+def _validate_lake_scheme(lake: Lake, n_buckets: int) -> None:
     """Fail loudly when the EXISTING lake was bucketed with a different
     ``n_buckets``: resuming (or retrying) under a new scheme would skip
     never-extracted buckets whose old-scheme ids happen to be completed
     and duplicate docs across old/new partitions — silent data loss.
 
-    The check reads a bounded SAMPLE (default 256 rows), not the lake:
+    The check reads a bounded SAMPLE (SCHEME_SAMPLE_ROWS), not the lake:
     under a wrong scheme each stored row keeps its bucket value only
     with probability ~1/n_buckets, so the false-negative chance is
-    ~(1/n_buckets)^sample — astronomically small — while a full
+    ~(1/n_buckets)^SCHEME_SAMPLE_ROWS — astronomically small — while a full
     filter(mismatch).limit(1) scan is O(corpus) on a HEALTHY lake
     (limit can only early-out when a mismatch exists), unacceptable per
     resume at the 10^12-doc design point. An empty lake passes."""
     from pyspark.errors import AnalysisException
 
     try:
-        sampled = lake.read_spans_out().select("doc_id", "bucket").limit(sample)
+        sampled = (lake.read_spans_out().select("doc_id", "bucket")
+                   .limit(SCHEME_SAMPLE_ROWS))
         n_bad = sampled.filter(
             F.col("bucket").isNull()
             | (F.col("bucket") != bucket_of(F.col("doc_id"), n_buckets))

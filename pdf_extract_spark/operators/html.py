@@ -1,6 +1,9 @@
 """The HTML path: raw page bytes -> main-content spans -> extracted
-spans (the north rule's "HTML boilerplate strip ... DOM heuristics" leg;
-structural twin of operators/layout.py's PDF byte path).
+spans (the north rule's "HTML boilerplate strip ... DOM heuristics" leg).
+
+What is HTML-specific lives here: the bounded markup gate and the DOM
+parser. The gate -> partition -> quarantining parse -> extract -> ledger
+plumbing is shared with the PDF leg in operators/bytepath.
 
 Two map-only Arrow stages over the salted/range-partitioned pages:
 
@@ -16,55 +19,24 @@ repartitionByRange from pipeline.partition_for_extraction.
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
-from pyspark.sql.pandas.functions import pandas_udf
+from pyspark.sql import DataFrame, functions as F
 
+from pdf_extract_spark.operators import bytepath
+from pdf_extract_spark.operators.extract import extract_spans
 from pdf_extract_spark.schemas import SPANS
 
-PARSED_HTML = T.StructType(
-    [
-        T.StructField("spans", SPANS, True),
-        T.StructField("parse_error", T.StringType(), True),
-    ]
-)
 
-
-@pandas_udf(PARSED_HTML)
-def parse_html_safe_udf(content: pd.Series) -> pd.DataFrame:
-    """Quarantining parse: a payload that is not an HTML document (null,
-    undecodable bytes, markup-free) must NOT raise inside the task — at
-    web scale one bad row would otherwise fail the whole job through
-    task retries. Returns (spans, parse_error); exactly one side is set.
-
-    Same fast-path shape as layout.parse_pdf_safe_udf: clean batches run
-    a bare loop with no per-document try/except; when a payload IS bad,
-    the quarantine loop resumes AT the failing payload, reusing the
-    successfully parsed prefix."""
+def _load_html_parser():
     from pdf_extract_spark.sources.htmlparse import HtmlError, html_to_spans
 
-    vals = content.tolist()
-    spans_out: list = []
-    try:
-        for b in vals:
-            # bytes(None) raises TypeError, routing null payloads to the
-            # quarantine loop along with HtmlError payloads
-            spans_out.append(html_to_spans(bytes(b)))
-        errs: list = [None] * len(vals)
-    except (HtmlError, TypeError):
-        errs = [None] * len(spans_out)
-        for b in vals[len(spans_out):]:
-            if b is None:
-                spans_out.append(None)
-                errs.append("null content")
-                continue
-            try:
-                spans_out.append(html_to_spans(bytes(b)))
-                errs.append(None)
-            except (HtmlError, TypeError) as e:
-                spans_out.append(None)
-                errs.append(f"{type(e).__name__}: {e}")
-    return pd.DataFrame({"spans": spans_out, "parse_error": errs})
+    return html_to_spans, HtmlError
+
+
+# null, undecodable or markup-free payloads become (NULL spans,
+# parse_error) rows instead of failing the task
+parse_html_safe_udf = bytepath.quarantining_udf(
+    "parse_html_safe_udf", "spans", SPANS, _load_html_parser
+)
 
 
 HTML_GATE_SCAN_BYTES = 4096
@@ -95,82 +67,24 @@ def validate_html(df: DataFrame, content_col: str = "content") -> DataFrame:
 
 
 def parse_htmls(df: DataFrame, content_col: str = "content") -> DataFrame:
-    """pages(doc_id, content:binary) -> (doc_id, spans, parse_error).
-
-    One quarantining Arrow pass: bad payloads surface as ``parse_error``
-    rows (spans NULL) instead of failing the task."""
-    p = df.select("doc_id", parse_html_safe_udf(F.col(content_col)).alias("p"))
-    return p.select(
-        "doc_id", F.col("p.spans").alias("spans"),
-        F.col("p.parse_error").alias("parse_error"),
-    )
+    """pages(doc_id, content:binary) -> (doc_id, spans, parse_error)."""
+    return bytepath.parse_payloads(df, parse_html_safe_udf, "spans", content_col)
 
 
 def html_to_spans_full(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """The one-pass HTML path with the mandated scale mechanics:
-    validate -> salt + repartitionByRange -> quarantining DOM parse +
-    boilerplate strip -> shared rule-core extraction. Returns
-    (doc_id, spans, parse_error): healthy pages carry EXTRACTED spans,
-    bad payloads carry the error string and NULL spans. Persist this
-    frame when you consume both sides (the filtered views below re-run
-    the parse if executed separately)."""
-    from pdf_extract_spark.operators.extract import extract_spans
-    from pdf_extract_spark.pipeline import partition_for_extraction
-
-    gate = html_gate()
-    valid = df.filter(gate)
-    # gate-rejected rows (null/empty/markup-free payloads) join the
-    # quarantine LEDGER instead of vanishing: row counts must reconcile
-    # against the input (spans rows + error rows == input rows), or a
-    # production audit under-reports failures
-    rejected = df.filter(~gate).select(
-        "doc_id",
-        F.lit(None).cast(SPANS).alias("spans"),
-        F.lit("failed validation gate: null, empty or markup-free payload")
-        .alias("parse_error"),
+    """The one-pass HTML path (bytepath.bytes_to_spans_full): healthy
+    pages carry EXTRACTED spans, bad payloads carry the error string and
+    NULL spans."""
+    return bytepath.bytes_to_spans_full(
+        df, html_gate(), "null, empty or markup-free payload",
+        parse_html_safe_udf, "spans", extract_spans, num_partitions,
     )
-    parted = partition_for_extraction(valid, num_partitions)
-    parsed = parse_htmls(parted)
-    # extract_spans maps NULL -> NULL, so quarantined rows pass through
-    return parsed.select(
-        "doc_id", extract_spans(F.col("spans")).alias("spans"), "parse_error"
-    ).unionByName(rejected)
 
 
 def html_to_spans(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Healthy pages only: (doc_id, spans) fully extracted."""
-    full = html_to_spans_full(df, num_partitions)
-    return full.filter(F.col("parse_error").isNull()).select("doc_id", "spans")
-
-
-def html_parse_errors(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """The quarantine view: (doc_id, parse_error) rows."""
-    full = html_to_spans_full(df, num_partitions)
-    return full.filter(F.col("parse_error").isNotNull()).select("doc_id", "parse_error")
-
-
-def html_split(
-    df: DataFrame, num_partitions: int | None = None, checkpoint: bool = True
-) -> tuple[DataFrame, DataFrame]:
-    """Both consumers from ONE parse: (healthy(doc_id, spans),
-    quarantine(doc_id, parse_error)).
-
-    The natural production pattern — write extracted spans AND the
-    quarantine ledger — would pay the expensive Python DOM pass twice if
-    it used the two filtered views above (separate actions rebuild the
-    plan). Here the parsed frame is localCheckpointed once (the
-    dedup_components precedent: materialize the expensive loop-invariant
-    input, then fan out), so both sides read executor-local blocks.
-    ``checkpoint=False`` returns lazy views for callers that persist or
-    write the full frame themselves."""
-    full = html_to_spans_full(df, num_partitions)
-    if checkpoint:
-        full = full.localCheckpoint()
-    healthy = full.filter(F.col("parse_error").isNull()).select("doc_id", "spans")
-    quarantine = full.filter(F.col("parse_error").isNotNull()).select(
-        "doc_id", "parse_error"
-    )
-    return healthy, quarantine
+    """Healthy pages only: (doc_id, spans) fully extracted. To consume
+    the ledger too, build html_to_spans_full once and use bytepath.split."""
+    return bytepath.healthy_spans(html_to_spans_full(df, num_partitions))
 
 
 # --------------------------------------------------------------------------

@@ -1,6 +1,10 @@
 """The layout path: raw PDF bytes -> parsed pages -> styled-layout
 extraction -> composed spans (SURVEY.md §2.1 S2/S5/S6, §3.3 stages 1-3).
 
+What is PDF-specific lives here: the %PDF- gate, the byte parser and the
+layout UDF. The gate -> partition -> quarantining parse -> extract ->
+ledger plumbing is shared with the HTML leg in operators/bytepath.
+
 Two map-only Arrow stages over the salted/range-partitioned documents:
 
   1. ``parse_pdfs`` — byte-stream parse (sources/pdfparse) per document,
@@ -20,60 +24,25 @@ back-to-back, one python worker pass each).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 
 from pdf_extract_spark import rules
+from pdf_extract_spark.operators import bytepath
 from pdf_extract_spark.schemas import PARSED_DOC, SPANS
 
 
-PARSED_WITH_ERROR = T.StructType(
-    [
-        T.StructField("pages", PARSED_DOC, True),
-        T.StructField("parse_error", T.StringType(), True),
-    ]
-)
-
-
-@pandas_udf(PARSED_WITH_ERROR)
-def parse_pdf_safe_udf(content: pd.Series) -> pd.DataFrame:
-    """Quarantining parse: a payload that passes the %PDF- magic but is
-    corrupt mid-stream (truncated xref, bad object offsets, broken
-    FlateDecode) must NOT raise inside the task — at 10^12 documents a
-    single corrupt file would otherwise fail the whole job through task
-    retries. Returns (pages, parse_error); exactly one side is set.
-
-    Clean batches take a FAST PATH with no per-document try/except,
-    errors column all-NULL (measured ~10% kernel win over
-    unconditionally per-doc try/except, which BENCH r02 flagged as the
-    pdf_bytes_extract drift). When a payload IS corrupt/null, the
-    quarantine loop resumes AT the failing payload — the successfully
-    parsed prefix is reused, so a tainted batch pays at most one extra
-    parse attempt, not a full re-parse of its clean documents."""
+def _load_pdf_parser():
     from pdf_extract_spark.sources.pdfparse import PdfError, parse_pdf
 
-    vals = content.tolist()
-    pages_out: list = []
-    try:
-        for b in vals:
-            # bytes(None) raises TypeError, routing null payloads to the
-            # quarantine loop along with PdfError corruption
-            pages_out.append(parse_pdf(bytes(b)))
-        errs: list = [None] * len(vals)
-    except (PdfError, TypeError):
-        errs = [None] * len(pages_out)
-        for b in vals[len(pages_out):]:
-            if b is None:
-                pages_out.append(None)
-                errs.append("null content")
-                continue
-            try:
-                pages_out.append(parse_pdf(bytes(b)))
-                errs.append(None)
-            except (PdfError, TypeError) as e:
-                pages_out.append(None)
-                errs.append(f"{type(e).__name__}: {e}")
-    return pd.DataFrame({"pages": pages_out, "parse_error": errs})
+    return parse_pdf, PdfError
+
+
+# corrupt-but-magic'd payloads (truncated xref, bad object offsets,
+# broken FlateDecode, /Encrypt) become (NULL pages, parse_error) rows
+parse_pdf_safe_udf = bytepath.quarantining_udf(
+    "parse_pdf_safe_udf", "pages", PARSED_DOC, _load_pdf_parser
+)
 
 
 @pandas_udf(SPANS)
@@ -105,15 +74,8 @@ def validate_pdfs(df: DataFrame, content_col: str = "content") -> DataFrame:
 
 
 def parse_pdfs(df: DataFrame, content_col: str = "content") -> DataFrame:
-    """documents(doc_id, content:binary) -> (doc_id, pages, parse_error).
-
-    One quarantining Arrow pass: corrupt payloads surface as
-    ``parse_error`` rows (pages NULL) instead of failing the task."""
-    p = df.select("doc_id", parse_pdf_safe_udf(F.col(content_col)).alias("p"))
-    return p.select(
-        "doc_id", F.col("p.pages").alias("pages"),
-        F.col("p.parse_error").alias("parse_error"),
-    )
+    """documents(doc_id, content:binary) -> (doc_id, pages, parse_error)."""
+    return bytepath.parse_payloads(df, parse_pdf_safe_udf, "pages", content_col)
 
 
 def layout_extract(df_parsed: DataFrame) -> DataFrame:
@@ -124,73 +86,17 @@ def layout_extract(df_parsed: DataFrame) -> DataFrame:
 
 
 def pdf_to_spans_full(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """The one-pass byte path with the mandated scale mechanics:
-    validate -> salt + repartitionByRange -> quarantining parse ->
-    layout/compose. Returns (doc_id, spans, parse_error): healthy docs
-    carry spans, corrupt-but-magic'd docs carry the error string and
-    NULL spans (F5 — the reference's error-class handling,
-    main.py:1678-1727). This is the surface to SINK at scale — one
-    table, one parse, error rows audit-visible; the filtered views below
-    each re-run the parse if executed separately, so persist this frame
-    (or write it once and filter the table) when you need both sides."""
-    from pdf_extract_spark.pipeline import partition_for_extraction
-
-    gate = pdf_gate()
-    valid = df.filter(gate)
-    # gate-rejected rows join the quarantine LEDGER (spans NULL + error
-    # string) so output row counts reconcile against the input
-    rejected = df.filter(~gate).select(
-        "doc_id",
-        F.lit(None).cast(SPANS).alias("spans"),
-        F.lit("failed validation gate: null, empty or non-%PDF- payload")
-        .alias("parse_error"),
+    """The one-pass byte path (bytepath.bytes_to_spans_full): healthy
+    docs carry spans, corrupt-but-magic'd and gate-rejected docs carry
+    the error string and NULL spans (F5 — the reference's error-class
+    handling, main.py:1678-1727)."""
+    return bytepath.bytes_to_spans_full(
+        df, pdf_gate(), "null, empty or non-%PDF- payload",
+        parse_pdf_safe_udf, "pages", layout_spans_udf, num_partitions,
     )
-    parted = partition_for_extraction(valid, num_partitions)
-    parsed = parse_pdfs(parted)
-    return layout_extract_with_errors(parsed).unionByName(rejected)
-
-
-def layout_extract_with_errors(parsed: DataFrame) -> DataFrame:
-    return parsed.select(
-        "doc_id", layout_spans_udf(F.col("pages")).alias("spans"), "parse_error"
-    )
-
-
-def healthy_spans(full: DataFrame) -> DataFrame:
-    """Filter a pdf_to_spans_full frame to (doc_id, spans) rows. When you
-    consume BOTH views, build the full frame once (persist or write it)
-    and filter that — deriving each view from raw bytes re-runs the
-    parse."""
-    return full.filter(F.col("parse_error").isNull()).select("doc_id", "spans")
-
-
-def parse_error_rows(full: DataFrame) -> DataFrame:
-    """Filter a pdf_to_spans_full frame to (doc_id, parse_error) rows."""
-    return full.filter(F.col("parse_error").isNotNull()).select("doc_id", "parse_error")
 
 
 def pdf_to_spans(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Healthy documents only: (doc_id, spans). Convenience over raw
-    bytes; see healthy_spans/parse_error_rows to split one parsed frame."""
-    return healthy_spans(pdf_to_spans_full(df, num_partitions))
-
-
-def pdf_parse_errors(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """The quarantine view over raw bytes; see parse_error_rows to avoid
-    a second parse when the full frame already exists."""
-    return parse_error_rows(pdf_to_spans_full(df, num_partitions))
-
-
-def pdf_split(
-    df: DataFrame, num_partitions: int | None = None, checkpoint: bool = True
-) -> tuple[DataFrame, DataFrame]:
-    """Both consumers from ONE parse: (healthy(doc_id, spans),
-    quarantine(doc_id, parse_error)) over a localCheckpointed full frame
-    — the html.html_split twin, for pipelines that write spans AND the
-    quarantine ledger without paying the byte parse twice.
-    ``checkpoint=False`` returns lazy views for callers that persist the
-    full frame themselves."""
-    full = pdf_to_spans_full(df, num_partitions)
-    if checkpoint:
-        full = full.localCheckpoint()
-    return healthy_spans(full), parse_error_rows(full)
+    """Healthy documents only: (doc_id, spans). To consume the ledger
+    too, build pdf_to_spans_full once and use bytepath.split."""
+    return bytepath.healthy_spans(pdf_to_spans_full(df, num_partitions))

@@ -4,7 +4,7 @@ The north rule (BASELINE.json) mandates three things Catalyst cannot do on
 its own (SURVEY.md §4.3):
 
   1. **skew defense** — documents are distributed by a salted hash of
-     ``doc_id`` (``pmod(xxhash64(doc_id), buckets)``) so neighbouring /
+     ``doc_id`` (``bucket_of(doc_id, SALT_BUCKETS)``) so neighbouring /
      lexicographically clustered doc_ids and giant-PDF hot spots spread
      uniformly across tasks (the reference's analog is its fixed 10-page
      batch split, /root/reference/utils.py:40-106);
@@ -25,23 +25,20 @@ from pyspark.sql import DataFrame, functions as F
 
 from pdf_extract_spark.operators.extract import extract_documents
 
-DEFAULT_SALT_BUCKETS = 4096
+SALT_BUCKETS = 4096
 
 
-def salted(df: DataFrame, buckets: int = DEFAULT_SALT_BUCKETS) -> DataFrame:
-    """Add the salt column used for partitioning + lineage keying."""
-    return df.withColumn(
-        "salt", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(buckets)).cast("int")
-    )
+def bucket_of(doc_id_col: F.Column, n_buckets: int) -> F.Column:
+    """``pmod(xxhash64(doc_id), n_buckets)`` — the one doc_id hash on the
+    extraction path: the partitioning salt and the lineage bucket."""
+    return F.pmod(F.xxhash64(doc_id_col), F.lit(n_buckets)).cast("int")
 
 
 def partition_for_extraction(
-    df: DataFrame,
-    num_partitions: int | None = None,
-    buckets: int = DEFAULT_SALT_BUCKETS,
+    df: DataFrame, num_partitions: int | None = None
 ) -> DataFrame:
     """Salt + repartitionByRange ahead of the extraction stage."""
-    df = salted(df, buckets)
+    df = df.withColumn("salt", bucket_of(F.col("doc_id"), SALT_BUCKETS))
     if num_partitions is not None:
         # explicit None check: a computed 0 must raise (repartitionByRange
         # would), not silently fall into the AQE-coalesced default path

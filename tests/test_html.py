@@ -1,7 +1,8 @@
 """HTML main-content path tests: writer->parser round trip across all
 three chrome layouts, boilerplate-strip guarantees, distributed
-end-to-end extraction vs the golden oracle, quarantine, and plan shape
-(north rule: "HTML boilerplate strip ... DOM heuristics")."""
+end-to-end extraction vs the golden oracle and quarantine (north rule:
+"HTML boilerplate strip ... DOM heuristics"; the plan shape is pinned in
+tests/test_bytepath.py)."""
 
 from __future__ import annotations
 
@@ -10,7 +11,7 @@ import random
 import pytest
 
 from pdf_extract_spark import generator, oracle
-from pdf_extract_spark.operators import html as H
+from pdf_extract_spark.operators import bytepath, html as H
 from pdf_extract_spark.sources import htmlgen, htmlparse
 
 N_DOCS = 40
@@ -128,6 +129,7 @@ def test_spark_html_to_spans_matches_oracle(spark):
     rows.append({"doc_id": "junk_nomarkup", "content": bytearray(b"plain text only")})
     rows.append({"doc_id": "junk_empty", "content": bytearray(b"")})
     rows.append({"doc_id": "junk_bare_lt", "content": bytearray(b"if a < b then maybe")})
+    rows.append({"doc_id": "junk_null", "content": None})
     df = spark.createDataFrame(rows, schema="doc_id string, content binary")
 
     got = {
@@ -138,14 +140,17 @@ def test_spark_html_to_spans_matches_oracle(spark):
     docs = [generator.make_document(d, seed=SEED) for d in range(N_DOCS)]
     assert got == oracle.expected_corpus(docs)
 
+    full = H.html_to_spans_full(df, num_partitions=4)
     errs = {r["doc_id"]: r["parse_error"]
-            for r in H.html_parse_errors(df, num_partitions=4).collect()}
+            for r in bytepath.parse_error_rows(full).collect()}
     # ALL junk rows reconcile in the ledger: the parser-quarantined one
     # with its parse error, the gate-rejected ones with the gate reason
-    assert set(errs) == {"junk_bare_lt", "junk_nomarkup", "junk_empty"}
+    assert set(errs) == {"junk_bare_lt", "junk_nomarkup", "junk_empty", "junk_null"}
+    assert len(got) + len(errs) == len(rows) == full.count()
     assert "no markup" in errs["junk_bare_lt"]
     assert "validation gate" in errs["junk_nomarkup"]
     assert "validation gate" in errs["junk_empty"]
+    assert "validation gate" in errs["junk_null"]
 
 
 def test_corrupt_batch_reuses_parsed_prefix(spark, monkeypatch):
@@ -205,24 +210,6 @@ def test_extract_html_folder_end_to_end(spark, tmp_path):
         doc["doc_id"] = f"page_{i:03d}"
         docs.append(doc)
     assert got == oracle.expected_corpus(docs)
-
-
-def test_plan_shape_one_exchange_two_arrow_stages(spark):
-    """The HTML path must stay map-only around the ONE mandated range
-    Exchange: DOM parse + extraction as two back-to-back Arrow stages,
-    no extra shuffle (CLAUDE.md plan invariants; count BEFORE collect
-    to avoid the AQE initial+final double print)."""
-    rows = [
-        {"doc_id": f"doc{d:08d}",
-         "content": bytearray(htmlgen.build_html(d, seed=SEED))}
-        for d in range(8)
-    ]
-    df = spark.createDataFrame(rows, schema="doc_id string, content binary")
-    plan = H.html_to_spans_full(df, num_partitions=4)._jdf.queryExecution() \
-        .executedPlan().toString()
-    n_ex = plan.count("+- Exchange") + plan.count("   Exchange")
-    assert n_ex == 1, plan
-    assert plan.count("ArrowEvalPython") == 2, plan
 
 
 def test_harvest_links_both_quote_styles(spark):
@@ -385,10 +372,10 @@ def test_bare_text_never_duplicates_block_content():
 
 
 def test_html_split_parses_once_for_both_consumers(spark):
-    """html_split returns the healthy and quarantine sides of ONE
-    materialized parse: results identical to the two filtered views, and
-    neither side's plan re-runs the Python DOM stage (the checkpointed
-    blocks are the source)."""
+    """bytepath.split over html_to_spans_full returns the healthy and
+    quarantine sides of ONE materialized parse: results identical to the
+    two filtered views, and neither side's plan re-runs the Python DOM
+    stage (the checkpointed blocks are the source)."""
     rows = [
         {"doc_id": f"doc{d:08d}",
          "content": bytearray(htmlgen.build_html(
@@ -398,7 +385,7 @@ def test_html_split_parses_once_for_both_consumers(spark):
     rows.append({"doc_id": "junk_bare_lt", "content": bytearray(b"if a < b then maybe")})
     df = spark.createDataFrame(rows, schema="doc_id string, content binary")
 
-    healthy, quarantine = H.html_split(df, num_partitions=4)
+    healthy, quarantine = bytepath.split(H.html_to_spans_full(df, num_partitions=4))
     want_spans = {r["doc_id"]: r["spans"]
                   for r in H.html_to_spans(df, num_partitions=4).collect()}
     got_spans = {r["doc_id"]: r["spans"] for r in healthy.collect()}

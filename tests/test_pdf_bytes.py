@@ -91,7 +91,7 @@ def test_corrupt_pdf_quarantined_not_fatal(spark):
     """A payload that passes the %PDF- magic but is corrupt mid-stream
     must become a parse_error row — NOT a task failure that kills the
     job — while healthy documents in the same batch extract normally."""
-    from pdf_extract_spark.operators import layout as L
+    from pdf_extract_spark.operators import bytepath, layout as L
     from pdf_extract_spark.sources import pdfgen
 
     good = bytes(pdfgen.build_pdf(0, seed=21))
@@ -103,26 +103,29 @@ def test_corrupt_pdf_quarantined_not_fatal(spark):
         {"doc_id": "garbage", "content": bytearray(b"%PDF-1.4\nnot a pdf at all")},
         # no magic: filtered by validate_pdfs before the parser
         {"doc_id": "notpdf", "content": bytearray(b"PK\x03\x04zipfile")},
+        # NULL payload: rejected by the NULL-safe gate
+        {"doc_id": "null", "content": None},
     ]
     df = spark.createDataFrame(rows, schema="doc_id string, content binary")
 
     # the at-scale pattern: ONE parse, both views filtered from it
     full = L.pdf_to_spans_full(df).persist()
     try:
-        spans = {r["doc_id"] for r in L.healthy_spans(full).collect()}
+        spans = {r["doc_id"] for r in bytepath.healthy_spans(full).collect()}
         assert spans == {"ok"}
-        errs = {r["doc_id"]: r["parse_error"] for r in L.parse_error_rows(full).collect()}
+        errs = {r["doc_id"]: r["parse_error"]
+                for r in bytepath.parse_error_rows(full).collect()}
         # gate-rejected rows reconcile in the ledger too (input row
         # counts must equal spans rows + error rows)
-        assert set(errs) == {"truncated", "garbage", "notpdf"}
+        assert set(errs) == {"truncated", "garbage", "notpdf", "null"}
+        assert len(spans) + len(errs) == len(rows) == full.count()
         assert "validation gate" in errs["notpdf"]
+        assert "validation gate" in errs["null"]
         assert all(e for e in errs.values())
     finally:
         full.unpersist()
-    # convenience views over raw bytes agree
+    # convenience view over raw bytes agrees
     assert {r["doc_id"] for r in L.pdf_to_spans(df).collect()} == {"ok"}
-    assert {r["doc_id"] for r in L.pdf_parse_errors(df).collect()} == {
-            "truncated", "garbage", "notpdf"}
 
 
 def test_quarantine_reuses_parsed_prefix(monkeypatch):
@@ -152,10 +155,10 @@ def test_quarantine_reuses_parsed_prefix(monkeypatch):
 
 
 def test_pdf_split_parses_once_for_both_consumers(spark):
-    """pdf_split (html_split's byte-path twin): healthy + quarantine from
+    """bytepath.split over pdf_to_spans_full: healthy + quarantine from
     ONE materialized parse — same results as the raw-bytes views, and
     neither side's plan re-runs the Python parse stage."""
-    from pdf_extract_spark.operators import layout as L
+    from pdf_extract_spark.operators import bytepath, layout as L
     from pdf_extract_spark.sources import pdfgen
 
     rows = [{"doc_id": f"doc{d:08d}",
@@ -164,7 +167,7 @@ def test_pdf_split_parses_once_for_both_consumers(spark):
     rows.append({"doc_id": "junk", "content": bytearray(b"%PDF-1.4 garbage")})
     df = spark.createDataFrame(rows, schema="doc_id string, content binary")
 
-    healthy, quarantine = L.pdf_split(df, num_partitions=4)
+    healthy, quarantine = bytepath.split(L.pdf_to_spans_full(df, num_partitions=4))
     want = {r["doc_id"]: r["spans"]
             for r in L.pdf_to_spans(df, num_partitions=4).collect()}
     assert {r["doc_id"]: r["spans"] for r in healthy.collect()} == want
@@ -331,7 +334,7 @@ def test_encrypted_pdf_raises_not_garbage():
 def test_encrypted_pdf_quarantined_in_batch(spark):
     """The Spark path routes an encrypted file to a parse_error row
     carrying the reason while healthy siblings extract normally."""
-    from pdf_extract_spark.operators import layout as L
+    from pdf_extract_spark.operators import bytepath, layout as L
     from pdf_extract_spark.sources import pdfgen
 
     good = bytes(pdfgen.build_pdf(0, seed=33))
@@ -344,9 +347,9 @@ def test_encrypted_pdf_quarantined_in_batch(spark):
     )
     full = L.pdf_to_spans_full(df).persist()
     try:
-        assert {r["doc_id"] for r in L.healthy_spans(full).collect()} == {"ok"}
+        assert {r["doc_id"] for r in bytepath.healthy_spans(full).collect()} == {"ok"}
         errs = {r["doc_id"]: r["parse_error"]
-                for r in L.parse_error_rows(full).collect()}
+                for r in bytepath.parse_error_rows(full).collect()}
         assert set(errs) == {"enc"}
         assert "encrypted" in errs["enc"]
     finally:
