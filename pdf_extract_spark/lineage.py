@@ -40,8 +40,7 @@ from dataclasses import dataclass, field
 import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
 
-from pdf_extract_spark.operators.extract import extract_documents
-from pdf_extract_spark.pipeline import bucket_of, partition_for_extraction
+from pdf_extract_spark.pipeline import bucket_of, run_extraction
 
 COMPLETED = "completed"
 FAILED = "failed"
@@ -322,11 +321,10 @@ def _process_group(
     group = [int(b) for b in group]
     try:
         sub = docs.filter(F.col("bucket").isin(group))
-        parted = partition_for_extraction(sub, num_partitions)
-        out = extract_documents(parted.select("doc_id", "spans", "bucket"))
-        # extract_documents projects (doc_id, spans); re-derive the bucket
+        # run_extraction projects (doc_id, spans); re-derive the bucket
         # column (deterministic function of doc_id) for partitioned commit.
-        out = out.withColumn("bucket", bucket_of(F.col("doc_id"), n_buckets))
+        out = run_extraction(sub, num_partitions).withColumn(
+            "bucket", bucket_of(F.col("doc_id"), n_buckets))
         # count per bucket inside the commit job, so the lineage rows need
         # no second pass over spans_out
         obs, bucket = Observation(), F.col("bucket")

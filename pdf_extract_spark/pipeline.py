@@ -12,11 +12,13 @@ its own (SURVEY.md §4.3):
      partitioning on ``(salt, doc_id)`` gives deterministic, balanced,
      re-creatable partitions, which is also what the lineage checkpoint
      keys on;
-  3. **checkpoint / resume** — per-partition lineage rows merged into the
-     lake's ``lineage`` table; a resumed run anti-joins completed
-     partitions (see lineage.py).
+  3. **checkpoint / resume** — per-bucket-group lineage rows appended to
+     the lake's ``lineage`` table; a resumed run anti-joins completed
+     buckets (see lineage.py).
 
 The extraction itself is a single map-only Arrow stage (operators/extract).
+Giant documents take the same plan as every other document: one
+rules.extract_document call per document, linear in its span count.
 """
 
 from __future__ import annotations
@@ -60,19 +62,3 @@ def run_extraction(
     """
     parted = partition_for_extraction(documents, num_partitions)
     return extract_documents(parted)
-
-
-def run_extraction_balanced(
-    documents: DataFrame,
-    num_partitions: int | None = None,
-    max_spans: int = 4096,
-) -> DataFrame:
-    """Skew-defused variant: documents above ``max_spans`` are chunked at
-    exact-safe boundaries and composed across tasks, so one 10^5-span
-    document cannot pin a task (SURVEY.md §7.4.4). Costs one extra
-    explode+regroup shuffle FOR THE GIANTS ONLY; byte-identical output
-    (tests/test_skew.py)."""
-    from pdf_extract_spark.operators.extract import extract_documents_balanced
-
-    parted = partition_for_extraction(documents, num_partitions)
-    return extract_documents_balanced(parted, max_spans)

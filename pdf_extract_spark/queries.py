@@ -485,30 +485,6 @@ def part_type_margins(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("extract_spans_balanced", EXTRACT_ORACLE_SQL)
-def extract_spans_balanced_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The skew-defused flagship (giant docs chunked at exact-safe
-    boundaries and recomposed in parallel). Output is byte-identical to
-    extract_spans_flagship, so it shares the extraction SQL oracle
-    (EXTRACT_ORACLE_SQL); cross-path equality is also asserted in
-    tests/test_skew.py."""
-    from pdf_extract_spark.pipeline import run_extraction_balanced
-
-    docs = synth_spans(_t(spark, sf_dir, "documents"))
-    out = run_extraction_balanced(docs, max_spans=64)
-    return (
-        out.select("doc_id", F.explode("spans").alias("s"))
-        .select(
-            "doc_id",
-            F.col("s.kind").alias("kind"),
-            F.col("s.text").alias("text"),
-            F.col("s.media_ref").alias("media_ref"),
-            F.col("s.offset").alias("offset"),
-        )
-        .orderBy("doc_id", "offset")
-    )
-
-
 # =====================================================================
 # windows / ordering (SURVEY.md §2.5)
 # =====================================================================
@@ -5101,7 +5077,6 @@ def skew_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------
 
 _DEMOTED_ORACLED = frozenset({
-    "extract_spans_balanced",   # same oracle as in-window extract_spans_flagship
     "join_orders_customers",    # join family: left_join_order_counts, full_outer_nation_counts
     "anti_join_customers",      # sibling semi_join_customers stays in-window
     "value_counts_lang",        # counts family: status_counts, pricing_summary
@@ -5265,7 +5240,7 @@ _DEMOTED_ORACLED = frozenset({
     # filter_kappa (never sampled); both demotions were driver-green in
     # a prior window and keep their per-run pytest value+dtype mirror:
     "web_curate",               # URL family: canonical_dedup, anchor_terms, curate_corpus_full (same salted-cap machinery) in-window
-    "extract_spans_flagship",   # the driver executes it EVERY round via entry(); golden 3-path + balanced sibling share its oracle
+    "extract_spans_flagship",   # the driver executes it EVERY round via entry(); golden 3-path shares its oracle
     # thirty-eighth r5 wave — yields slots to lsh_tuning and
     # eval_contamination (never sampled); both demotions keep their
     # per-run pytest value+dtype mirror and their machinery in-window:

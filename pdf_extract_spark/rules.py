@@ -41,7 +41,6 @@ FOOTER_MARGIN = 0.95  # bottom 5% of page height (config.py:27)
 H1_SIZE_RATIO = 1.5  # H1 if size >= 1.5 * body mode AND bold (config.py:32-39)
 H3_COLORS = frozenset({3101846, 3036053, 352961, 353217})  # config.py:41-44
 FLAG_BOLD = 16  # layout_analyzer.py:130
-FLAG_ITALIC = 2  # layout_analyzer.py:151
 
 HEADER_KINDS = ("H1", "H2", "H3")
 TERMINALS = ".?!"
@@ -114,7 +113,6 @@ RE_SENT_BOUNDARY = re.compile(r"[.?!]+[\"')\]]*(?:\s+|$)")
 # which contains no brackets is exactly one sentence — skips the char walk
 RE_SINGLE_SENTENCE = re.compile(r"^[^.?!()\[\]]*[.?!]+[\"')\]]*$")
 
-RE_NUMBERS_ONLY = re.compile(r"^[\d\s,.]*$")  # F7, metadata_generator.py:430-432
 RE_KOREAN = re.compile(r"[ㄱ-ㆎ가-힣]")  # C17, metadata_generator.py:383-421
 
 
@@ -493,9 +491,8 @@ def tag_fragments(spans: list[dict]) -> list[dict]:
     per-fragment cleanup + empty drop, text-heuristic tagging. Returns
     pre-merge fragments {kind, text, media_ref}.
 
-    Exposed separately so the giant-document split path can chunk AFTER
-    tagging (safe split points are only knowable on tagged fragments) while
-    staying byte-identical to the single-pass path.
+    Exposed separately so the tagging stage can be measured on its own
+    (perfbench's ``rules.tag_spans_per_s`` probe).
 
     NULL span elements (legal: SPANS is an array with containsNull) are
     dropped before ordering: they yield no fragment and count toward no
@@ -526,24 +523,6 @@ def tag_fragments(spans: list[dict]) -> list[dict]:
             continue
         frags.append({"kind": tag_by_text(t), "text": t, "media_ref": ""})
     return frags
-
-
-def safe_split_points(frags: list[dict], target: int) -> list[int]:
-    """Chunk boundaries for giant documents that are EXACT under run-merge
-    + composition (SURVEY.md §7.4.4): position i may start a chunk only if
-    frags[i] is a header or media fragment AND frags[i-1] has a different
-    kind — a P-run always flushes before a non-P fragment, and a same-kind
-    header run is never severed, so processing chunks independently and
-    concatenating yields the single-pass result. Greedy: next safe point
-    at or after each multiple of ``target``."""
-    points = []
-    n = len(frags)
-    want = target
-    for i in range(1, n):
-        if i >= want and frags[i]["kind"] != "P" and frags[i]["kind"] != frags[i - 1]["kind"]:
-            points.append(i)
-            want = i + target
-    return points
 
 
 def extract_document(spans: list[dict]) -> list[dict]:

@@ -1,12 +1,14 @@
 """Explicit StructType schemas — never schema inference (SURVEY.md §1.3).
 
 Shapes mirror the reference's data model (citations into /root/reference):
-  * SPAN / DOCUMENTS: the BASELINE.json ``input_hint`` contract.
-  * BLOCK:  PyMuPDF block tuples, euaa_사례/pdf_to_json/layout_analyzer.py:21.
-  * LINE:   style-carrying line dicts, layout_analyzer.py:79-100.
-  * FRAGMENT: tagged fragments {id,tag,text,size,color},
-    euaa_사례/pdf_to_json/main.py:100-106.
-  * LINEAGE/METRICS: the SQLite status machine, database.py:59-125.
+  * SPAN / DOCUMENTS: the BASELINE.json ``input_hint`` contract; the
+    extraction output (spans_out) has the same shape, with kind in
+    {H1,H2,H3,P,table,media}.
+  * LINE / PARSED_PAGE / RAW_BLOCKS: style-carrying line dicts,
+    layout_analyzer.py:79-100, as the PDF byte path parses them.
+  * FRAGMENTS_LANG / ALIGNED_PAIR: the KR<->EN alignment fixtures.
+
+The lake's lineage schema lives with its writer (lineage.LINEAGE_WRITE).
 """
 
 from __future__ import annotations
@@ -32,10 +34,6 @@ DOCUMENTS = T.StructType(
     ]
 )
 
-# Output table has the same shape; kind ∈ {H1,H2,H3,P,table,media} after
-# extraction (layout path adds grid-detected 'table' cells).
-SPANS_OUT = DOCUMENTS
-
 # ------------------------------------------------------------ layout IR
 BBOX = T.StructType(
     [
@@ -43,18 +41,6 @@ BBOX = T.StructType(
         T.StructField("y0", T.DoubleType(), False),
         T.StructField("x1", T.DoubleType(), False),
         T.StructField("y1", T.DoubleType(), False),
-    ]
-)
-
-BLOCK = T.StructType(
-    [
-        T.StructField("x0", T.DoubleType(), False),
-        T.StructField("y0", T.DoubleType(), False),
-        T.StructField("x1", T.DoubleType(), False),
-        T.StructField("y1", T.DoubleType(), False),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("block_no", T.IntegerType(), False),
-        T.StructField("block_type", T.IntegerType(), False),  # 0=text, 1=image
     ]
 )
 
@@ -90,43 +76,6 @@ RAW_BLOCKS = T.StructType(
         T.StructField("page_w", T.DoubleType(), False),
         T.StructField("page_h", T.DoubleType(), False),
         T.StructField("lines", T.ArrayType(LINE), False),
-    ]
-)
-
-FRAGMENT = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("id", T.IntegerType(), False),
-        T.StructField("tag", T.StringType(), False),  # H1/H2/H3/P/media
-        T.StructField("text", T.StringType(), True),
-        T.StructField("media_ref", T.StringType(), True),
-        T.StructField("size", T.DoubleType(), True),
-        T.StructField("color", T.IntegerType(), True),
-    ]
-)
-
-# ----------------------------------------------------------- lineage
-LINEAGE = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("status", T.StringType(), False),  # pending/in_progress/completed/failed
-        T.StructField("doc_count", T.LongType(), True),
-        T.StructField("span_count", T.LongType(), True),
-        T.StructField("started_at", T.TimestampType(), True),
-        T.StructField("completed_at", T.TimestampType(), True),
-        T.StructField("error_message", T.StringType(), True),
-    ]
-)
-
-METRICS = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("stage", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("docs_per_sec", T.DoubleType(), True),
-        T.StructField("sentences_count", T.LongType(), True),
-        T.StructField("processing_time_s", T.DoubleType(), True),
     ]
 )
 

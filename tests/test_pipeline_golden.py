@@ -66,6 +66,11 @@ def test_empty_and_media_only_documents(spark):
             {"kind": "media", "text": None, "media_ref": None, "offset": 1},
             {"kind": "text", "text": "Kept sentence.", "media_ref": None, "offset": 2},
         ]},
+        # every line is a repeated running header: all boilerplate, nothing kept
+        {"doc_id": "d_all_boilerplate", "spans": [
+            {"kind": "text", "text": "Running header", "media_ref": "", "offset": i}
+            for i in range(10)
+        ]},
     ]
     # doc_id is not a key: two rows sharing one both come back
     dups = [
@@ -85,6 +90,7 @@ def test_empty_and_media_only_documents(spark):
     assert got["d_media"] == [("media", "", "m:d_media:1", 0), ("media", "", "m:d_media:2", 1)]
     assert got["d_empty"] == []
     assert got["d_blank"] == []
+    assert got["d_all_boilerplate"] == []
     assert [t for _, t, _, _ in got["d_null_elem"]] == ["First sentence.", "Second sentence."]
 
     got_dups = sorted(_rows_spans(r) for r in rows if r["doc_id"] == "d_dup")

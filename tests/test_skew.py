@@ -1,67 +1,15 @@
-"""Giant-document skew defense: the chunked path must be byte-identical
-to the single-pass path / golden oracle (SURVEY.md §7.4.4)."""
+"""Skew-prone inputs on the one extraction plan (salted range partition +
+map-only Arrow stage): NULL-spans rows and boilerplate line-length gating.
+Giant-document parity is in tests/test_pipeline_golden.py."""
 
 from __future__ import annotations
 
-from pdf_extract_spark import generator, oracle, rules
-from pdf_extract_spark.operators.extract import extract_documents_balanced
-from pdf_extract_spark.schemas import DOCUMENTS
-
-
-def test_safe_split_points_are_exact():
-    """Chunking at safe points + concat == single pass, on every generated
-    doc (including ones with long same-tag header runs)."""
-    for d in range(40):
-        doc = generator.make_document(d, seed=77)
-        frags = rules.tag_fragments(doc["spans"])
-        whole = rules.compose_fragments(rules.merge_consecutive_tags(frags))
-        for target in (5, 20, 100):
-            pts = rules.safe_split_points(frags, target)
-            bounds = [0] + pts + [len(frags)]
-            parts = []
-            for a, b in zip(bounds, bounds[1:]):
-                parts.extend(
-                    rules.compose_fragments(rules.merge_consecutive_tags(frags[a:b]))
-                )
-            renumbered = [
-                {**p, "offset": i} for i, p in enumerate(parts)
-            ]
-            assert renumbered == whole, f"doc {d} target {target}"
-
-
-def test_split_points_respect_header_runs():
-    frags = (
-        [{"kind": "P", "text": "a", "media_ref": ""}] * 3
-        + [{"kind": "H1", "text": "h1", "media_ref": ""}] * 3  # run must not sever
-        + [{"kind": "P", "text": "b", "media_ref": ""}] * 3
-        + [{"kind": "media", "text": "", "media_ref": "m"}]
-        + [{"kind": "P", "text": "c", "media_ref": ""}] * 3
-    )
-    pts = rules.safe_split_points(frags, 2)
-    for i in pts:
-        assert frags[i]["kind"] != "P"
-        assert frags[i]["kind"] != frags[i - 1]["kind"]
-    assert 4 not in pts and 5 not in pts  # inside the H1 run
-
-
-def test_balanced_extraction_matches_oracle(spark):
-    """Mixed corpus with forced giants through the balanced operator, low
-    max_spans so every giant actually chunks."""
-    docs = generator.make_corpus(40, seed=19)
-    giants = [d["doc_id"] for d in docs if len(d["spans"]) > 400]
-    assert giants, "corpus must contain giant docs for this test"
-    df = spark.createDataFrame(docs, schema=DOCUMENTS)
-    out = extract_documents_balanced(df, max_spans=400)
-    got = {
-        r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]]
-        for r in out.collect()
-    }
-    assert got == oracle.expected_corpus(docs)
+from pdf_extract_spark.pipeline import run_extraction
 
 
 def test_balanced_preserves_null_spans_rows(spark):
-    """A row with spans=NULL must not vanish from the balanced path (it
-    flows down the small path and maps to NULL, same as extract_documents)."""
+    """A row with spans=NULL must not vanish from the salted, range-balanced
+    extraction plan: it maps to NULL, and an empty spans array to []."""
     from pyspark.sql import types as T
 
     schema = T.StructType([
@@ -79,53 +27,10 @@ def test_balanced_preserves_null_spans_rows(spark):
         ("d3", []),
     ]
     df = spark.createDataFrame(rows, schema=schema)
-    got = {r["doc_id"]: r["spans"] for r in extract_documents_balanced(df, max_spans=4).collect()}
+    got = {r["doc_id"]: r["spans"] for r in run_extraction(df).collect()}
     assert set(got) == {"d1", "d2", "d3"}
     assert got["d2"] is None
     assert got["d3"] == []
-
-
-def test_balanced_giant_with_all_dropped_fragments(spark):
-    """A GIANT doc whose fragments all drop during tagging (every text
-    span is boilerplate) must still appear in the balanced output with an
-    empty spans array — same as extract_documents — instead of vanishing
-    through an empty posexplode."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType([
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("spans", T.ArrayType(T.StructType([
-            T.StructField("kind", T.StringType(), False),
-            T.StructField("text", T.StringType(), True),
-            T.StructField("media_ref", T.StringType(), True),
-            T.StructField("offset", T.IntegerType(), False),
-        ])), True),
-    ])
-    # 10 identical short lines -> all boilerplate (>= 3 repeats), doc is
-    # "giant" under max_spans=4 so it takes the chunked path
-    giant = [
-        {"kind": "text", "text": "Running header", "media_ref": "", "offset": i}
-        for i in range(10)
-    ]
-    rows = [
-        ("g_empty", giant),
-        ("normal", [{"kind": "text", "text": "One sentence here.", "media_ref": "", "offset": 0}]),
-    ]
-    df = spark.createDataFrame(rows, schema=schema)
-    got = {
-        r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]]
-        for r in extract_documents_balanced(df, max_spans=4).collect()
-    }
-    assert set(got) == {"g_empty", "normal"}
-    assert got["g_empty"] == []
-    # parity with the single-pass operator
-    from pdf_extract_spark.operators.extract import extract_documents
-
-    single = {
-        r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]]
-        for r in extract_documents(df).collect()
-    }
-    assert got == single
 
 
 def test_boilerplate_length_gate_uses_raw_text(spark):
