@@ -360,7 +360,6 @@ def retry_bucket(
     run_id: str,
     bucket: int,
     n_buckets: int = 16,
-    num_partitions: int | None = None,
 ) -> RunReport:
     """Unconditionally re-extract ONE bucket (the reference's
     ``--retry-batch N`` / ``retry_specific_batch``,
@@ -420,7 +419,7 @@ def retry_bucket(
                 "was extracted from?"
             )
     report = RunReport(run_id=run_id, buckets_total=n_buckets)
-    _process_group(lake, docs, run_id, [bucket], n_buckets, num_partitions, report)
+    _process_group(lake, docs, run_id, [bucket], n_buckets, None, report)
     return report
 
 

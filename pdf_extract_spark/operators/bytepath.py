@@ -76,12 +76,10 @@ def quarantining_udf(name: str, field: str, field_type: T.DataType, load):
     return pandas_udf(schema)(parse_safe)
 
 
-def parse_payloads(
-    df: DataFrame, udf, field: str, content_col: str = "content"
-) -> DataFrame:
+def parse_payloads(df: DataFrame, udf, field: str) -> DataFrame:
     """(doc_id, content) -> (doc_id, <field>, parse_error): one
     quarantining Arrow pass."""
-    p = df.select("doc_id", udf(F.col(content_col)).alias("p"))
+    p = df.select("doc_id", udf(F.col("content")).alias("p"))
     return p.select(
         "doc_id", F.col(f"p.{field}").alias(field),
         F.col("p.parse_error").alias("parse_error"),
@@ -126,12 +124,10 @@ def parse_error_rows(full: DataFrame) -> DataFrame:
     return full.filter(F.col("parse_error").isNotNull()).select("doc_id", "parse_error")
 
 
-def split(full: DataFrame, checkpoint: bool = True) -> tuple[DataFrame, DataFrame]:
+def split(full: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Both consumers from ONE parse: (healthy_spans, parse_error_rows)
     over a localCheckpointed full frame, so a pipeline writing spans AND
     the ledger does not pay the Python parse twice (separate actions on
-    lazy views rebuild the plan). ``checkpoint=False`` returns lazy views
-    for callers that persist or write the full frame themselves."""
-    if checkpoint:
-        full = full.localCheckpoint()
+    lazy views rebuild the plan)."""
+    full = full.localCheckpoint()
     return healthy_spans(full), parse_error_rows(full)

@@ -12,14 +12,15 @@ with the deterministic rule core, executed as ONE map-only stage:
   * giant documents are bounded by spark.sql.execution.arrow.maxRecordsPerBatch
     so one Arrow batch never holds more than a few hundred documents.
 
-At cluster scale the input is hash-salted and range-repartitioned by the
-pipeline wrapper (pipeline.py) BEFORE this stage, per the north rule.
+Every documents -> spans entry (batch, lineage, the byte paths, the
+streaming drain) reaches this UDF only through pipeline.run_extraction or
+operators/bytepath, after the salted range repartition the north rule
+mandates (pipeline.partition_for_extraction).
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 
 from pdf_extract_spark import rules
@@ -29,8 +30,3 @@ from pdf_extract_spark.schemas import SPANS
 @pandas_udf(SPANS)
 def extract_spans(spans: pd.Series) -> pd.Series:
     return spans.map(lambda s: rules.extract_document(s) if s is not None else None)
-
-
-def extract_documents(df):
-    """documents(doc_id, spans) -> spans_out(doc_id, spans). Map-only."""
-    return df.select("doc_id", extract_spans(F.col("spans")).alias("spans"))

@@ -42,7 +42,7 @@ parse_html_safe_udf = bytepath.quarantining_udf(
 HTML_GATE_SCAN_BYTES = 4096
 
 
-def html_gate(content_col: str = "content"):
+def html_gate():
     """The S2-analog validity predicate: non-empty payload whose FIRST
     ``HTML_GATE_SCAN_BYTES`` contain markup. NULL-safe (coalesces to
     false). The scan is bounded (ADVICE r4): casting the whole payload
@@ -51,7 +51,7 @@ def html_gate(content_col: str = "content"):
     HTML shows '<' in its first handful of bytes via doctype/html/head;
     a page whose first tag sits past 4 KiB of tagless prose is
     quarantined as markup-free, the documented gate semantics)."""
-    c = F.col(content_col)
+    c = F.col("content")
     head = F.substring(c, 1, HTML_GATE_SCAN_BYTES).cast("string")
     return F.coalesce(
         c.isNotNull() & (F.length(c) > 0) & (F.instr(head, "<") > 0),
@@ -59,16 +59,16 @@ def html_gate(content_col: str = "content"):
     )
 
 
-def validate_html(df: DataFrame, content_col: str = "content") -> DataFrame:
+def validate_html(df: DataFrame) -> DataFrame:
     """Keep only rows whose payload is non-empty and contains markup (the
     HTML analog of the PDF %PDF- magic gate, layout.validate_pdfs). Pure
     Catalyst expression — junk rows never reach the Python parser."""
-    return df.filter(html_gate(content_col))
+    return df.filter(html_gate())
 
 
-def parse_htmls(df: DataFrame, content_col: str = "content") -> DataFrame:
+def parse_htmls(df: DataFrame) -> DataFrame:
     """pages(doc_id, content:binary) -> (doc_id, spans, parse_error)."""
-    return bytepath.parse_payloads(df, parse_html_safe_udf, "spans", content_col)
+    return bytepath.parse_payloads(df, parse_html_safe_udf, "spans")
 
 
 def html_to_spans_full(df: DataFrame, num_partitions: int | None = None) -> DataFrame:

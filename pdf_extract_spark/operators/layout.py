@@ -55,27 +55,27 @@ def layout_spans_udf(pages: pd.Series) -> pd.Series:
     return pages.map(one)
 
 
-def pdf_gate(content_col: str = "content"):
+def pdf_gate():
     """The S2 validity predicate: non-empty payload with the %PDF- magic.
     NULL-safe (coalesces to false)."""
-    c = F.col(content_col)
+    c = F.col("content")
     return F.coalesce(
         c.isNotNull() & (F.length(c) > 0) & (c.substr(1, 5) == F.lit(b"%PDF-")),
         F.lit(False),
     )
 
 
-def validate_pdfs(df: DataFrame, content_col: str = "content") -> DataFrame:
+def validate_pdfs(df: DataFrame) -> DataFrame:
     """S2 (reference /root/reference/main.py:1678-1727): keep only rows
     whose payload is non-empty and starts with the %PDF- magic. Pure
     Catalyst expression — evaluated before any Python stage, so invalid
     bytes never reach the parser."""
-    return df.filter(pdf_gate(content_col))
+    return df.filter(pdf_gate())
 
 
-def parse_pdfs(df: DataFrame, content_col: str = "content") -> DataFrame:
+def parse_pdfs(df: DataFrame) -> DataFrame:
     """documents(doc_id, content:binary) -> (doc_id, pages, parse_error)."""
-    return bytepath.parse_payloads(df, parse_pdf_safe_udf, "pages", content_col)
+    return bytepath.parse_payloads(df, parse_pdf_safe_udf, "pages")
 
 
 def layout_extract(df_parsed: DataFrame) -> DataFrame:

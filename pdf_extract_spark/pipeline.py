@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from pdf_extract_spark.operators.extract import extract_documents
+from pdf_extract_spark.operators.extract import extract_spans
 
 SALT_BUCKETS = 4096
 
@@ -58,7 +58,9 @@ def run_extraction(
 
     One shuffle (the mandated range repartition), then one map-only
     Arrow stage; nothing else. At 1000 executors this scales linearly —
-    there is no agg/join in the hot path to bottleneck on.
+    there is no agg/join in the hot path to bottleneck on. The one place
+    that composes partition and kernel: batch, lineage groups and the
+    streaming drain's micro-batches all call it.
     """
     parted = partition_for_extraction(documents, num_partitions)
-    return extract_documents(parted)
+    return parted.select("doc_id", extract_spans(F.col("spans")).alias("spans"))

@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from pdf_extract_spark import curation
 from pdf_extract_spark.operators import dedup, metacompare as MC, multimodal, packing, similarity, textstats
-from pdf_extract_spark.operators.extract import extract_spans
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 

@@ -10,8 +10,10 @@ three things that matter most at the 100 TB design point.
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
+from pyspark.sql.udf import UserDefinedFunction
 
 
 def build_spark(
@@ -64,4 +66,21 @@ def build_spark(
     from pdf_extract_spark.packaging import ship_package
 
     ship_package(spark)
+    _rebind_udfs()
     return spark
+
+
+def _rebind_udfs() -> None:
+    """Drop the cached JVM function of every module-level UDF loaded so
+    far, so each rebuilds against the live context on its next use.
+    PySpark builds it once, on first use, bound to that context's Python
+    accumulator; after ``stop()`` and a new session the stale binding
+    makes every Python task log "Failed to update accumulator ... Broken
+    pipe". Names and ``.func`` are untouched."""
+    for name, mod in list(sys.modules.items()):
+        if mod is None or not name.startswith("pdf_extract_spark"):
+            continue
+        for v in list(vars(mod).values()):
+            udf = getattr(v, "_unwrapped", None) if callable(v) else None
+            if isinstance(udf, UserDefinedFunction):
+                udf._judf_placeholder = None

@@ -30,11 +30,11 @@ def _scan_folder(spark: SparkSession, folder: str, ext: str):
     return raw.select(stem.alias("doc_id"), F.col("content"))
 
 
-def extract_pdf_folder(spark: SparkSession, folder: str, num_partitions: int | None = None) -> DataFrame:
+def extract_pdf_folder(spark: SparkSession, folder: str) -> DataFrame:
     """Folder -> validated -> parsed -> composed spans (the cli entry)."""
     from pdf_extract_spark.operators.layout import pdf_to_spans
 
-    return pdf_to_spans(scan_pdf_folder(spark, folder), num_partitions)
+    return pdf_to_spans(scan_pdf_folder(spark, folder))
 
 
 def scan_html_folder(spark: SparkSession, folder: str) -> DataFrame:
@@ -43,8 +43,8 @@ def scan_html_folder(spark: SparkSession, folder: str) -> DataFrame:
     return _scan_folder(spark, folder, "html")
 
 
-def extract_html_folder(spark: SparkSession, folder: str, num_partitions: int | None = None) -> DataFrame:
+def extract_html_folder(spark: SparkSession, folder: str) -> DataFrame:
     """Folder of pages -> markup gate -> DOM strip -> composed spans."""
     from pdf_extract_spark.operators.html import html_to_spans
 
-    return html_to_spans(scan_html_folder(spark, folder), num_partitions)
+    return html_to_spans(scan_html_folder(spark, folder))

@@ -10,9 +10,11 @@ survey names: ``readStream`` over the documents table with
 role of the lineage table (exactly-once per input file), and each
 invocation drains whatever arrived since the last run, then stops.
 
-This is the idiomatic shape for a continuously-fed 100 TB documents
-lake: the SAME extraction DataFrame graph (operators/extract) runs in
-both batch and streaming — only the source/sink bindings differ.
+The drain adds no plan of its own: each micro-batch is a static
+DataFrame inside ``foreachBatch`` and goes through
+pipeline.run_extraction — the same salted range partition and Arrow
+kernel as the batch and lineage paths. Only the source/sink bindings
+differ.
 """
 
 from __future__ import annotations
@@ -24,8 +26,28 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupStateTimeout
 
-from pdf_extract_spark.operators.extract import extract_documents
+from pdf_extract_spark.pipeline import run_extraction
 from pdf_extract_spark.schemas import DOCUMENTS
+
+
+def batch_sink(output_dir: str):
+    """The drain's ``foreachBatch`` commit: run_extraction over one
+    micro-batch (a static DataFrame, so the salted repartitionByRange a
+    stream cannot take is legal here), landed under its ``batch_id``
+    partition by dynamic overwrite. A batch replayed after a crash
+    between the write and the checkpoint commit overwrites its OWN
+    partition instead of duplicating rows."""
+
+    def commit(batch_df: DataFrame, batch_id: int) -> None:
+        out = run_extraction(batch_df).withColumn("batch_id", F.lit(int(batch_id)))
+        (
+            out.write.partitionBy("batch_id")
+            .option("partitionOverwriteMode", "dynamic")
+            .mode("overwrite")
+            .parquet(output_dir)
+        )
+
+    return commit
 
 
 def incremental_extraction(
@@ -33,30 +55,15 @@ def incremental_extraction(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
-    """Drain all unprocessed document files from ``input_dir`` through the
-    extraction stage into ``output_dir`` parquet, exactly once.
-
-    Returns the started query; call ``.awaitTermination()`` — with
-    availableNow the query stops by itself when caught up.
-
-    Note: streaming file sources don't support repartitionByRange (no
-    global sort on an unbounded input); parallelism comes from the file
-    source's task-per-file split, and the salt/skew defense applies in
-    the batch path. The extraction itself is the same map-only Arrow
-    stage, unchanged.
-    """
-    reader = spark.readStream.schema(DOCUMENTS)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    docs = reader.parquet(input_dir)
-    out = extract_documents(docs)
+    """Drain all unprocessed document files from ``input_dir`` into
+    ``output_dir`` parquet, (doc_id, spans) partitioned by ``batch_id``,
+    exactly once. With availableNow the returned query stops by itself
+    when caught up; call ``.awaitTermination()``."""
+    docs = spark.readStream.schema(DOCUMENTS).parquet(input_dir)
     return (
-        out.writeStream.format("parquet")
-        .option("path", output_dir)
+        docs.writeStream.foreachBatch(batch_sink(output_dir))
         .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
         .trigger(availableNow=True)
         .start()
     )
@@ -377,43 +384,6 @@ def streaming_dedup_ingest(
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-# --------------------------------------------------------------------------
-# idempotent foreachBatch lake sink
-# --------------------------------------------------------------------------
-
-def incremental_extraction_to_lake(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Streaming extraction with an IDEMPOTENT batch sink: each
-    micro-batch extracts and lands under its ``batch_id`` partition via
-    dynamic partition overwrite, so a replayed batch (crash between the
-    write and the checkpoint commit — the one window where plain appends
-    double-write) overwrites its OWN partition instead of duplicating
-    rows. This is the foreachBatch exactly-once pattern; on Iceberg the
-    same hook would MERGE INTO keyed on doc_id.
-    """
-    docs = spark.readStream.schema(DOCUMENTS).parquet(input_dir)
-
-    def commit(batch_df: DataFrame, batch_id: int) -> None:
-        out = extract_documents(batch_df).withColumn("batch_id", F.lit(int(batch_id)))
-        (
-            out.write.partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(output_dir)
-        )
-
-    return (
-        docs.writeStream.foreachBatch(commit)
-        .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )

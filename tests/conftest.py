@@ -36,3 +36,23 @@ def ddb():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
     yield con
     con.close()
+
+
+@pytest.fixture(scope="session")
+def query_result(spark):
+    """``query_result(name)`` -> that catalogue query's result on
+    ``SF_DIR``, run on Spark once per session and eagerly
+    localCheckpointed. Both oracle gates (test_entry's ``collect()`` rows,
+    test_dtype_gate's ``toPandas()``) read the same materialized rows, so
+    each query's plan runs once instead of once per gate. The queries
+    come through the driver entry (``__spark_entry__.queries``)."""
+    import __spark_entry__
+
+    queries, memo = __spark_entry__.queries(), {}
+
+    def get(name):
+        if name not in memo:
+            memo[name] = queries[name](spark, SF_DIR).localCheckpoint(eager=True)
+        return memo[name]
+
+    return get

@@ -8,13 +8,12 @@ from __future__ import annotations
 
 import pytest
 
-from pdf_extract_spark.queries import ORACLES, QUERIES
-from tests.conftest import SF_DIR
+from pdf_extract_spark.queries import ORACLES
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
-def test_dtype_and_value_exact(spark, ddb, name):
-    sdf = QUERIES[name](spark, SF_DIR).toPandas()
+def test_dtype_and_value_exact(query_result, ddb, name):
+    sdf = query_result(name).toPandas()
     odf = ddb.execute(ORACLES[name]).df()
     cols = sorted(sdf.columns)
     assert cols == sorted(odf.columns), f"{name}: column names differ"

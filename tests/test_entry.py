@@ -10,7 +10,6 @@ import os
 import pytest
 
 import __spark_entry__ as entry_mod
-from tests.conftest import SF_DIR
 
 
 def _norm_cell(v):
@@ -42,10 +41,9 @@ ALL = sorted(entry_mod.queries())
 
 
 @pytest.mark.parametrize("name", ALL)
-def test_query_matches_oracle(spark, ddb, name):
-    q = entry_mod.queries()[name]
+def test_query_matches_oracle(query_result, ddb, name):
     oracles = entry_mod.oracle_sql()
-    sdf = q(spark, SF_DIR)
+    sdf = query_result(name)
     srows = sdf.collect()
     scols = sdf.columns
     if name not in oracles:

@@ -40,7 +40,6 @@ def test_boilerplate_length_gate_uses_raw_text(spark):
     from pyspark.sql import types as T
 
     from pdf_extract_spark import oracle
-    from pdf_extract_spark.operators.extract import extract_documents
 
     schema = T.StructType([
         T.StructField("doc_id", T.StringType(), False),
@@ -59,7 +58,7 @@ def test_boilerplate_length_gate_uses_raw_text(spark):
     df = spark.createDataFrame([("d1", doc["spans"])], schema=schema)
     got = {
         r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]]
-        for r in extract_documents(df).collect()
+        for r in run_extraction(df).collect()
     }
     exp = {"d1": [
         (s["kind"], s["text"], s["media_ref"], s["offset"])

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pdf_extract_spark import generator, oracle
 from pdf_extract_spark.schemas import DOCUMENTS
-from pdf_extract_spark.streaming import incremental_extraction
+from pdf_extract_spark.streaming import batch_sink, incremental_extraction
 
 
 def _collect(spark, path):
@@ -16,6 +16,10 @@ def _collect(spark, path):
 
 
 def test_incremental_extraction_exactly_once(spark, tmp_path):
+    """Two availableNow waves land each doc exactly once, equal to the
+    batch oracle after each wave; a simulated batch REPLAY (the last
+    batch_id re-committed through the same sink) adds no rows — the
+    dynamic overwrite replaces that batch's own partition."""
     inp, outp, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ckpt")
 
     batch1 = generator.make_corpus(20, seed=31)
@@ -33,7 +37,15 @@ def test_incremental_extraction_exactly_once(spark, tmp_path):
     got2 = _collect(spark, outp)
 
     assert len(got2) == 32  # no duplicates from re-reading batch1 files
+    assert spark.read.parquet(outp).count() == 32
     assert got2 == oracle.expected_corpus(batch1 + batch2)
+
+    # simulate the crash-replay window: re-commit wave 2 under ITS batch id
+    out = spark.read.parquet(outp).select("batch_id").distinct()
+    replay_id = max(r["batch_id"] for r in out.collect())
+    batch_sink(outp)(spark.createDataFrame(batch2, schema=DOCUMENTS), replay_id)
+    assert spark.read.parquet(outp).count() == 32  # no duplicates from the replay
+    assert _collect(spark, outp) == oracle.expected_corpus(batch1 + batch2)
 
 
 def test_stateful_chunk_assembler(spark, tmp_path):
@@ -226,50 +238,6 @@ def test_completed_doc_ignores_redelivered_chunks(spark, tmp_path):
     rows = spark.read.parquet(outp).collect()
     assert len(rows) == 1
     assert rows[0]["status"] == "ok"
-
-
-def test_foreach_batch_lake_sink_idempotent(spark, tmp_path):
-    """Two availableNow passes land each doc exactly once; a simulated
-    batch REPLAY (same batch_id re-committed) does not duplicate rows —
-    the dynamic overwrite replaces that batch's own partition."""
-    from pdf_extract_spark.streaming import incremental_extraction_to_lake
-
-    inp, outp, ckpt = str(tmp_path / "in"), str(tmp_path / "lake"), str(tmp_path / "ck")
-    w1 = generator.make_corpus(10, seed=61)
-    spark.createDataFrame(w1, schema=DOCUMENTS).write.mode("append").parquet(inp)
-    incremental_extraction_to_lake(spark, inp, outp, ckpt).awaitTermination(180)
-
-    w2 = [generator.make_document(i, seed=61) for i in range(10, 16)]
-    spark.createDataFrame(w2, schema=DOCUMENTS).write.mode("append").parquet(inp)
-    incremental_extraction_to_lake(spark, inp, outp, ckpt).awaitTermination(180)
-
-    lake = spark.read.parquet(outp)
-    assert lake.count() == 16
-    assert lake.select("doc_id").distinct().count() == 16
-
-    # simulate the crash-replay window: re-commit wave 2 under ITS batch id
-    from pyspark.sql import functions as F
-
-    from pdf_extract_spark.operators.extract import extract_documents
-
-    batch_ids = [r["batch_id"] for r in lake.select("batch_id").distinct().collect()]
-    replay_id = max(batch_ids)
-    replay = extract_documents(
-        spark.createDataFrame(w2, schema=DOCUMENTS)
-    ).withColumn("batch_id", F.lit(int(replay_id)))
-    (
-        replay.write.partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(outp)
-    )
-    after = spark.read.parquet(outp)
-    assert after.count() == 16  # no duplicates from the replay
-    got = {
-        r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]]
-        for r in after.collect()
-    }
-    assert got == oracle.expected_corpus(w1 + w2)
 
 
 def _chunk_sets(seed_a=31, seed_b=77):
