@@ -17,9 +17,7 @@ def _collect(spark, path):
 
 def test_incremental_extraction_exactly_once(spark, tmp_path):
     """Two availableNow waves land each doc exactly once, equal to the
-    batch oracle after each wave; a simulated batch REPLAY (the last
-    batch_id re-committed through the same sink) adds no rows — the
-    dynamic overwrite replaces that batch's own partition."""
+    batch oracle after each wave."""
     inp, outp, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ckpt")
 
     batch1 = generator.make_corpus(20, seed=31)
@@ -40,12 +38,30 @@ def test_incremental_extraction_exactly_once(spark, tmp_path):
     assert spark.read.parquet(outp).count() == 32
     assert got2 == oracle.expected_corpus(batch1 + batch2)
 
+
+def test_foreach_batch_lake_sink_idempotent(spark, tmp_path):
+    """Two availableNow passes land each doc exactly once; a simulated
+    batch REPLAY (the last batch_id re-committed through the same sink)
+    does not duplicate rows — the dynamic overwrite replaces that batch's
+    own partition."""
+    inp, outp, ckpt = str(tmp_path / "in"), str(tmp_path / "lake"), str(tmp_path / "ck")
+    w1 = generator.make_corpus(10, seed=61)
+    spark.createDataFrame(w1, schema=DOCUMENTS).write.mode("append").parquet(inp)
+    incremental_extraction(spark, inp, outp, ckpt).awaitTermination(180)
+
+    w2 = [generator.make_document(i, seed=61) for i in range(10, 16)]
+    spark.createDataFrame(w2, schema=DOCUMENTS).write.mode("append").parquet(inp)
+    incremental_extraction(spark, inp, outp, ckpt).awaitTermination(180)
+
+    lake = spark.read.parquet(outp)
+    assert lake.count() == 16
+    assert lake.select("doc_id").distinct().count() == 16
+
     # simulate the crash-replay window: re-commit wave 2 under ITS batch id
-    out = spark.read.parquet(outp).select("batch_id").distinct()
-    replay_id = max(r["batch_id"] for r in out.collect())
-    batch_sink(outp)(spark.createDataFrame(batch2, schema=DOCUMENTS), replay_id)
-    assert spark.read.parquet(outp).count() == 32  # no duplicates from the replay
-    assert _collect(spark, outp) == oracle.expected_corpus(batch1 + batch2)
+    replay_id = max(r["batch_id"] for r in lake.select("batch_id").distinct().collect())
+    batch_sink(outp)(spark.createDataFrame(w2, schema=DOCUMENTS), replay_id)
+    assert spark.read.parquet(outp).count() == 16  # no duplicates from the replay
+    assert _collect(spark, outp) == oracle.expected_corpus(w1 + w2)
 
 
 def test_stateful_chunk_assembler(spark, tmp_path):
