@@ -781,7 +781,6 @@ def run_durability(n_docs: int = 64000, cpus: str = "32") -> dict:
             run_extraction_with_lineage(
                 lake, inp, run_id=f"dur_{label}",
                 n_buckets=n_buckets, group_size=group_size,
-                num_partitions=int(cpus) * 3,
             )
             out[f"{label}_sec"] = round(time.perf_counter() - t0, 1)
             if label == "partitioned":

@@ -17,10 +17,13 @@ main.py:996-1017).  Our distributed equivalent:
     ``.writeTo(tbl).overwritePartitions()``) and counts docs/spans per
     bucket on the way (``Observation``), then ONE small write appends
     the ``completed`` lineage rows carrying those counts;
-  * **resume** anti-joins the documents table against completed lineage
-    buckets (``left_anti``), so a killed job re-extracts only
-    unfinished buckets, and re-running a half-written bucket simply
-    overwrites that bucket's partition — idempotent end state;
+  * **resume** plans from the lineage table alone: the buckets to run
+    are ``range(n_buckets)`` minus the completed ones (the reference's
+    ``status NOT IN ('completed')``), so a killed job re-extracts only
+    unfinished buckets without a pass over the input, and re-running a
+    half-written bucket simply overwrites that bucket's partition —
+    idempotent end state. A bucket no document hashes to commits
+    nothing and records a 0/0 ``completed`` row;
   * metrics (per-group docs/sec + span counts) are a view over the
     completed lineage rows, ``Lake.read_metrics`` — no table (reference
     analog: ``extraction_stats`` / ``batch_summary_stats``,
@@ -41,6 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
 
 from pdf_extract_spark.pipeline import bucket_of, run_extraction
+from pdf_extract_spark.schemas import DOCUMENTS
 
 COMPLETED = "completed"
 FAILED = "failed"
@@ -60,6 +64,9 @@ LINEAGE_WRITE = T.StructType(
     ]
 )
 
+# spans_out as committed: the extraction output plus its partition column
+SPANS_OUT = T.StructType(DOCUMENTS.fields + [T.StructField("bucket", T.IntegerType(), True)])
+
 METRICS_WRITE = T.StructType(
     [
         T.StructField("run_id", T.StringType(), False),
@@ -78,7 +85,6 @@ class RunReport:
     """What one ``run_extraction_with_lineage`` invocation actually did."""
 
     run_id: str
-    buckets_total: int
     buckets_skipped: list[int] = field(default_factory=list)
     buckets_processed: list[int] = field(default_factory=list)
     doc_count: int = 0
@@ -113,12 +119,24 @@ class Lake:
         self.lineage = f"{self.root}{sep}lineage"
         self.metrics = f"{self.root}{sep}metrics"  # older lakes' table; unused
 
+    def _exists(self, target: str) -> bool:
+        """Whether ``target`` has been written: the catalog on Iceberg,
+        the Hadoop FileSystem of the path on parquet. Asking first, rather
+        than catching a failed read, keeps the session's query listeners
+        (an ``Observation`` registers one) from logging each miss as an
+        ERROR with a stack trace."""
+        if self.table_format == "iceberg":
+            return self.spark.catalog.tableExists(target)
+        sc = self.spark.sparkContext
+        path = sc._jvm.org.apache.hadoop.fs.Path(target)
+        return path.getFileSystem(sc._jsc.hadoopConfiguration()).exists(path)
+
     # ------------------------------------------------------------- sinks
 
     def commit_spans(self, out: DataFrame) -> None:
         """Atomically (re)place the written bucket partitions."""
         if self.table_format == "iceberg":
-            if self.spark.catalog.tableExists(self.spans_out):
+            if self._exists(self.spans_out):
                 out.writeTo(self.spans_out).overwritePartitions()
             else:  # first commit creates the bucket-partitioned table
                 out.writeTo(self.spans_out).partitionedBy(F.col("bucket")).create()
@@ -140,7 +158,7 @@ class Lake:
         rows = pd.DataFrame.from_records(rows, columns=schema.fieldNames())
         df = self.spark.createDataFrame(rows, schema=schema).coalesce(1)
         if self.table_format == "iceberg":
-            if self.spark.catalog.tableExists(target):
+            if self._exists(target):
                 df.writeTo(target).append()
             else:
                 df.writeTo(target).create()
@@ -149,19 +167,20 @@ class Lake:
 
     # ------------------------------------------------------------- reads
 
-    def read_lineage(self) -> DataFrame | None:
-        from pyspark.errors import AnalysisException
-
-        try:
-            if self.table_format == "iceberg":
-                return self.spark.table(self.lineage)
-            return self.spark.read.parquet(self.lineage)
-        except AnalysisException:
-            # first run: no lineage yet. ONLY the missing-path/table case
-            # may read as None — a corrupt or unreadable lineage table
-            # must surface, not silently restart the whole corpus as if
-            # nothing had ever completed
+    def _read(self, target: str, schema: T.StructType) -> DataFrame | None:
+        """``target`` with the schema it was written with, or None before
+        its first write. Only a missing table reads as None: a corrupt one
+        fails when read, rather than restarting the corpus as if nothing
+        had completed. Parquet is never schema-inferred, so a committed
+        but still empty directory reads as zero rows."""
+        if not self._exists(target):
             return None
+        if self.table_format == "iceberg":
+            return self.spark.table(target)
+        return self.spark.read.schema(schema).parquet(target)
+
+    def read_lineage(self) -> DataFrame | None:
+        return self._read(self.lineage, LINEAGE_WRITE)
 
     def completed_buckets_df(self) -> DataFrame | None:
         """Buckets whose LATEST lineage row is ``completed`` (a bucket that
@@ -172,10 +191,8 @@ class Lake:
         latest = lin.groupBy("bucket").agg(_latest_status().alias("status"))
         return latest.filter(F.col("status") == COMPLETED).select("bucket")
 
-    def read_spans_out(self) -> DataFrame:
-        if self.table_format == "iceberg":
-            return self.spark.table(self.spans_out)
-        return self.spark.read.parquet(self.spans_out)
+    def read_spans_out(self) -> DataFrame | None:
+        return self._read(self.spans_out, SPANS_OUT)
 
     def read_metrics(self) -> DataFrame | None:
         """Per-group metrics (``METRICS_WRITE`` columns) as a view over
@@ -218,10 +235,14 @@ def run_extraction_with_lineage(
     run_id: str,
     n_buckets: int = 16,
     group_size: int = 4,
-    num_partitions: int | None = None,
     fail_after_groups: int | None = None,
 ) -> RunReport:
     """Extract ``documents`` into the lake, checkpointing per bucket group.
+
+    Every bucket of ``range(n_buckets)`` the lineage table does not list
+    as completed runs, in groups of ``group_size``; the plan reads no
+    input. An empty bucket is recorded completed with 0 docs, so a
+    finished run has exactly ``n_buckets`` completed buckets.
 
     ``fail_after_groups`` injects a crash after N committed groups (the
     kill/resume test hook — SURVEY.md §5.2 'resume test').
@@ -229,21 +250,18 @@ def run_extraction_with_lineage(
     _validate_lake_scheme(lake, n_buckets)
     docs = _with_bucket(documents, n_buckets)
 
-    # one distinct-bucket scan; the completed set is tiny (<= n_buckets
-    # lineage rows), so the anti-join semantics run driver-side
-    all_buckets = sorted(r["bucket"] for r in docs.select("bucket").distinct().collect())
     done_df = lake.completed_buckets_df()
     done = {r["bucket"] for r in done_df.collect()} if done_df is not None else set()
-    skipped = [b for b in all_buckets if b in done]
-    todo = [b for b in all_buckets if b not in done]
+    skipped = [b for b in range(n_buckets) if b in done]
+    todo = [b for b in range(n_buckets) if b not in done]
 
-    report = RunReport(run_id=run_id, buckets_total=n_buckets, buckets_skipped=skipped)
+    report = RunReport(run_id=run_id, buckets_skipped=skipped)
 
     groups = [todo[i : i + group_size] for i in range(0, len(todo), group_size)]
     for gi, group in enumerate(groups):
         if fail_after_groups is not None and gi >= fail_after_groups:
             raise RuntimeError(f"injected failure before group {gi} (test hook)")
-        _process_group(lake, docs, run_id, group, n_buckets, num_partitions, report)
+        _process_group(lake, docs, run_id, group, n_buckets, report)
     return report
 
 
@@ -260,17 +278,13 @@ def _validate_lake_scheme(lake: Lake, n_buckets: int) -> None:
     filter(mismatch).limit(1) scan is O(corpus) on a HEALTHY lake
     (limit can only early-out when a mismatch exists), unacceptable per
     resume at the 10^12-doc design point. An empty lake passes."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        sampled = (lake.read_spans_out().select("doc_id", "bucket")
-                   .limit(SCHEME_SAMPLE_ROWS))
-        n_bad = sampled.filter(
-            F.col("bucket").isNull()
-            | (F.col("bucket") != bucket_of(F.col("doc_id"), n_buckets))
-        ).count()
-    except AnalysisException:
+    spans = lake.read_spans_out()
+    if spans is None:
         return
+    n_bad = spans.select("doc_id", "bucket").limit(SCHEME_SAMPLE_ROWS).filter(
+        F.col("bucket").isNull()
+        | (F.col("bucket") != bucket_of(F.col("doc_id"), n_buckets))
+    ).count()
     if n_bad > 0:
         raise ValueError(
             f"lake at {lake.spans_out} was not bucketed with "
@@ -307,7 +321,7 @@ def _with_bucket(documents: DataFrame, n_buckets: int) -> DataFrame:
 
 def _process_group(
     lake: Lake, docs: DataFrame, run_id: str, group: list[int],
-    n_buckets: int, num_partitions: int | None, report: RunReport,
+    n_buckets: int, report: RunReport,
 ) -> None:
     """Extract + commit ONE bucket group, append its lineage rows, fold
     the counts into ``report`` (shared by the resume loop and
@@ -323,7 +337,7 @@ def _process_group(
         sub = docs.filter(F.col("bucket").isin(group))
         # run_extraction projects (doc_id, spans); re-derive the bucket
         # column (deterministic function of doc_id) for partitioned commit.
-        out = run_extraction(sub, num_partitions).withColumn(
+        out = run_extraction(sub).withColumn(
             "bucket", bucket_of(F.col("doc_id"), n_buckets))
         # count per bucket inside the commit job, so the lineage rows need
         # no second pass over spans_out
@@ -399,18 +413,8 @@ def retry_bucket(
                 f"(n_buckets={n_buckets}) needs the same --input the "
                 "lake was extracted from"
             )
-        from pyspark.errors import AnalysisException
-
-        try:
-            stale = (
-                lake.read_spans_out()
-                .filter(F.col("bucket") == bucket)
-                .limit(1)
-                .count()
-            )
-        except AnalysisException:
-            stale = 0  # no spans_out yet: nothing stale to protect
-        if stale:
+        spans = lake.read_spans_out()  # None: nothing stale to protect
+        if spans is not None and spans.filter(F.col("bucket") == bucket).limit(1).count():
             raise ValueError(
                 f"input contains no documents for bucket {bucket} "
                 f"(n_buckets={n_buckets}) but the lake has spans there; "
@@ -418,8 +422,8 @@ def retry_bucket(
                 "completed lineage row — is --input the corpus the lake "
                 "was extracted from?"
             )
-    report = RunReport(run_id=run_id, buckets_total=n_buckets)
-    _process_group(lake, docs, run_id, [bucket], n_buckets, None, report)
+    report = RunReport(run_id=run_id)
+    _process_group(lake, docs, run_id, [bucket], n_buckets, report)
     return report
 
 
@@ -428,20 +432,14 @@ def count_summary(lake: Lake) -> dict:
     ``--count`` path, /root/reference/cli.py:113-120): documents and
     spans in spans_out, per-status bucket counts from the LATEST lineage
     row per bucket, and the distinct run count."""
-    from pyspark.errors import AnalysisException
-
     out = {"docs": 0, "spans": 0, "runs": 0, "buckets": {}}
-    try:
-        spans = lake.read_spans_out()
+    spans = lake.read_spans_out()
+    if spans is not None:
         agg = spans.agg(
             F.count("*").alias("docs"), F.sum(F.size("spans")).alias("spans")
         ).collect()[0]
         out["docs"] = int(agg["docs"])
         out["spans"] = int(agg["spans"] or 0)
-    except AnalysisException:
-        pass  # no spans_out yet (missing path / unknown table)
-    # any OTHER failure (corrupt parquet, catalog misconfig, permissions)
-    # must surface, not read as "0 docs" next to completed lineage rows
     lin = lake.read_lineage()
     if lin is not None:
         latest = lin.groupBy("bucket").agg(_latest_status().alias("status"))

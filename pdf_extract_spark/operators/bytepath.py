@@ -93,7 +93,6 @@ def bytes_to_spans_full(
     parse_udf,
     field: str,
     extract_udf,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """validate -> salt + repartitionByRange -> quarantining parse ->
     extraction. Returns (doc_id, spans, parse_error): healthy docs carry
@@ -107,7 +106,7 @@ def bytes_to_spans_full(
         F.lit(None).cast(SPANS).alias("spans"),
         F.lit(f"failed validation gate: {reject_reason}").alias("parse_error"),
     )
-    parted = partition_for_extraction(df.filter(gate), num_partitions)
+    parted = partition_for_extraction(df.filter(gate))
     parsed = parse_payloads(parted, parse_udf, field)
     return parsed.select(
         "doc_id", extract_udf(F.col(field)).alias("spans"), "parse_error"

@@ -71,20 +71,20 @@ def parse_htmls(df: DataFrame) -> DataFrame:
     return bytepath.parse_payloads(df, parse_html_safe_udf, "spans")
 
 
-def html_to_spans_full(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
+def html_to_spans_full(df: DataFrame) -> DataFrame:
     """The one-pass HTML path (bytepath.bytes_to_spans_full): healthy
     pages carry EXTRACTED spans, bad payloads carry the error string and
     NULL spans."""
     return bytepath.bytes_to_spans_full(
         df, html_gate(), "null, empty or markup-free payload",
-        parse_html_safe_udf, "spans", extract_spans, num_partitions,
+        parse_html_safe_udf, "spans", extract_spans,
     )
 
 
-def html_to_spans(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
+def html_to_spans(df: DataFrame) -> DataFrame:
     """Healthy pages only: (doc_id, spans) fully extracted. To consume
     the ledger too, build html_to_spans_full once and use bytepath.split."""
-    return bytepath.healthy_spans(html_to_spans_full(df, num_partitions))
+    return bytepath.healthy_spans(html_to_spans_full(df))
 
 
 # --------------------------------------------------------------------------

@@ -85,18 +85,18 @@ def layout_extract(df_parsed: DataFrame) -> DataFrame:
     )
 
 
-def pdf_to_spans_full(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
+def pdf_to_spans_full(df: DataFrame) -> DataFrame:
     """The one-pass byte path (bytepath.bytes_to_spans_full): healthy
     docs carry spans, corrupt-but-magic'd and gate-rejected docs carry
     the error string and NULL spans (F5 — the reference's error-class
     handling, main.py:1678-1727)."""
     return bytepath.bytes_to_spans_full(
         df, pdf_gate(), "null, empty or non-%PDF- payload",
-        parse_pdf_safe_udf, "pages", layout_spans_udf, num_partitions,
+        parse_pdf_safe_udf, "pages", layout_spans_udf,
     )
 
 
-def pdf_to_spans(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
+def pdf_to_spans(df: DataFrame) -> DataFrame:
     """Healthy documents only: (doc_id, spans). To consume the ledger
     too, build pdf_to_spans_full once and use bytepath.split."""
-    return bytepath.healthy_spans(pdf_to_spans_full(df, num_partitions))
+    return bytepath.healthy_spans(pdf_to_spans_full(df))

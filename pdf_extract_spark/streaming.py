@@ -124,9 +124,7 @@ def _assemble_fn(key, pdfs, state, tombstone_ttl_ms: int | None = None):
     and, if the full set is replayed, emits a duplicate output row — so
     the TTL must exceed the source's replay horizon; downstream lineage
     keyed on doc_id dedups stragglers. availableNow drains don't need a
-    TTL (default None = NoTimeout, tombstones retained forever).
-    Checkpoints written by the pre-"expected" state format (a flat
-    {idx: payload} blob) are migrated transparently."""
+    TTL (default None = NoTimeout, tombstones retained forever)."""
     from pdf_extract_spark import rules
 
     (doc_id,) = key
@@ -149,12 +147,8 @@ def _assemble_fn(key, pdfs, state, tombstone_ttl_ms: int | None = None):
         _arm_ttl()
         yield pd.DataFrame([], columns=["doc_id", "spans_json", "status"])
         return
-    if "chunks" in st or "expected" in st:
-        buffered: dict = st.get("chunks", {})
-        expected = st.get("expected")
-    else:  # legacy flat {chunk_idx: payload} checkpoint blob
-        buffered = st
-        expected = None
+    buffered: dict = st.get("chunks", {})
+    expected = st.get("expected")
     error = None
     for pdf in pdfs:
         for ci, nc, payload in zip(

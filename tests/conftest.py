@@ -39,6 +39,28 @@ def ddb():
 
 
 @pytest.fixture(scope="session")
+def oracle_table(ddb):
+    """``oracle_table(name)`` -> the name of a DuckDB temp table holding
+    that catalogue query's ``oracle_sql()`` result, built once per
+    session. Both oracle gates read it, each through its own fetch path
+    (test_entry ``fetchall()``, test_dtype_gate ``.df()``), so each
+    oracle runs once instead of once per gate. CREATE TABLE AS keeps the
+    query's column types, so the frames carry the query's dtypes."""
+    import __spark_entry__
+
+    oracles, memo = __spark_entry__.oracle_sql(), {}
+
+    def get(name):
+        if name not in memo:
+            table = f"oracle_{len(memo)}"
+            ddb.execute(f"CREATE TEMP TABLE {table} AS SELECT * FROM ({oracles[name]})")
+            memo[name] = table
+        return memo[name]
+
+    return get
+
+
+@pytest.fixture(scope="session")
 def query_result(spark):
     """``query_result(name)`` -> that catalogue query's result on
     ``SF_DIR``, run on Spark once per session and eagerly

@@ -23,8 +23,7 @@ def test_plan_shape_one_exchange_two_arrow_stages(spark, fmt):
     full_fn, build = FORMATS[fmt]
     rows = [{"doc_id": f"doc{d:08d}", "content": bytearray(build(d))} for d in range(8)]
     df = spark.createDataFrame(rows, schema="doc_id string, content binary")
-    plan = full_fn(df, num_partitions=4)._jdf.queryExecution() \
-        .executedPlan().toString()
+    plan = full_fn(df)._jdf.queryExecution().executedPlan().toString()
     n_ex = plan.count("+- Exchange") + plan.count("   Exchange")
     assert n_ex == 1, plan
     assert plan.count("ArrowEvalPython") == 2, plan

@@ -12,9 +12,9 @@ from pdf_extract_spark.queries import ORACLES
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
-def test_dtype_and_value_exact(query_result, ddb, name):
+def test_dtype_and_value_exact(query_result, oracle_table, ddb, name):
     sdf = query_result(name).toPandas()
-    odf = ddb.execute(ORACLES[name]).df()
+    odf = ddb.execute(f"SELECT * FROM {oracle_table(name)}").df()
     cols = sorted(sdf.columns)
     assert cols == sorted(odf.columns), f"{name}: column names differ"
     sdf = sdf[cols].sort_values(cols).reset_index(drop=True)

@@ -135,12 +135,12 @@ def test_spark_html_to_spans_matches_oracle(spark):
     got = {
         r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"])
                       for s in r["spans"]]
-        for r in H.html_to_spans(df, num_partitions=4).collect()
+        for r in H.html_to_spans(df).collect()
     }
     docs = [generator.make_document(d, seed=SEED) for d in range(N_DOCS)]
     assert got == oracle.expected_corpus(docs)
 
-    full = H.html_to_spans_full(df, num_partitions=4)
+    full = H.html_to_spans_full(df)
     errs = {r["doc_id"]: r["parse_error"]
             for r in bytepath.parse_error_rows(full).collect()}
     # ALL junk rows reconcile in the ledger: the parser-quarantined one
@@ -385,9 +385,9 @@ def test_html_split_parses_once_for_both_consumers(spark):
     rows.append({"doc_id": "junk_bare_lt", "content": bytearray(b"if a < b then maybe")})
     df = spark.createDataFrame(rows, schema="doc_id string, content binary")
 
-    healthy, quarantine = bytepath.split(H.html_to_spans_full(df, num_partitions=4))
+    healthy, quarantine = bytepath.split(H.html_to_spans_full(df))
     want_spans = {r["doc_id"]: r["spans"]
-                  for r in H.html_to_spans(df, num_partitions=4).collect()}
+                  for r in H.html_to_spans(df).collect()}
     got_spans = {r["doc_id"]: r["spans"] for r in healthy.collect()}
     assert got_spans == want_spans
     errs = {r["doc_id"]: r["parse_error"] for r in quarantine.collect()}

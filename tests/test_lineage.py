@@ -8,6 +8,10 @@ table is identical to an uninterrupted run.
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import pytest
 
 from pdf_extract_spark import generator, oracle
@@ -177,6 +181,8 @@ def test_iceberg_dispatch_seam(spark, monkeypatch):
 
     lake = Lake(spark, "ice.db", table_format="iceberg")
     assert (lake.spans_out, lake.lineage) == ("ice.db.spans_out", "ice.db.lineage")
+    # tableExists says no: both reads are None, without reading anything
+    assert lake.read_lineage() is None and lake.read_spans_out() is None
 
     df = spark.range(3).selectExpr("cast(id AS int) AS bucket")
     lake.commit_spans(df)
@@ -195,14 +201,13 @@ def test_iceberg_dispatch_seam(spark, monkeypatch):
     lake._append(rows, LINEAGE_WRITE, lake.lineage)
     assert log == [("append", "ice.db.lineage")]
 
-    # reads dispatch to spark.table (which fails here — no real catalog —
-    # proving the parquet reader is NOT silently used)
-    import pytest as _pytest
+    # once tableExists says yes, reads dispatch to spark.table (which
+    # fails here — no real catalog — proving the parquet reader is NOT
+    # silently used)
+    with pytest.raises(Exception):
+        lake.read_spans_out().collect()
 
-    with _pytest.raises(Exception):
-        spark.table("ice.db.spans_out").collect()
-
-    with _pytest.raises(ValueError):
+    with pytest.raises(ValueError):
         Lake(spark, "x", table_format="delta")
 
 
@@ -386,9 +391,12 @@ def test_retry_bucket_genuinely_empty_is_a_truthful_noop(spark, docs_df, tmp_pat
 
     lake = Lake(spark, str(tmp_path / "lake"))
     thin = docs_df.filter(bucket_of(F.col("doc_id"), N_BUCKETS) != 3)
-    run_extraction_with_lineage(
+    run = run_extraction_with_lineage(
         lake, thin, run_id="r1", n_buckets=N_BUCKETS, group_size=GROUP
     )
+    # the run plans from lineage alone: the empty bucket ran too (0/0)
+    assert run.buckets_processed == list(range(N_BUCKETS))
+    assert lake.completed_buckets_df().count() == N_BUCKETS
     rep = retry_bucket(lake, thin, run_id="r2", bucket=3, n_buckets=N_BUCKETS)
     assert rep.buckets_processed
     lin = lake.read_lineage()
@@ -487,3 +495,76 @@ def test_crash_between_commit_and_lineage_write(spark, docs_df, tmp_path, monkey
     assert _collect_spans(lake.read_spans_out()) == golden
     out = lake.read_spans_out()
     assert out.count() == out.select("doc_id").distinct().count() == N_DOCS
+
+
+def test_empty_bucket_commit_on_fresh_lake(spark, docs_df, tmp_path):
+    """The first write to a lake can be an empty commit: a retry of a
+    bucket no document hashes to. The committed but empty spans_out
+    reads as zero rows, count_summary reports the one 0-doc completed
+    bucket, and a later run validates the lake, skips that bucket and
+    completes every bucket."""
+    from pyspark.sql import functions as F
+
+    from pdf_extract_spark.lineage import bucket_of, count_summary, retry_bucket
+
+    thin = docs_df.filter(bucket_of(F.col("doc_id"), N_BUCKETS) != 3)
+    lake = Lake(spark, str(tmp_path / "lake"))
+    rep = retry_bucket(lake, thin, run_id="r0", bucket=3, n_buckets=N_BUCKETS)
+    assert rep.buckets_processed == [3] and rep.doc_count == 0
+    assert lake.read_spans_out().count() == 0
+    assert count_summary(lake) == {
+        "docs": 0, "spans": 0, "runs": 1, "buckets": {"completed": 1}}
+
+    rep = run_extraction_with_lineage(
+        lake, thin, run_id="r1", n_buckets=N_BUCKETS, group_size=GROUP
+    )
+    assert rep.buckets_skipped == [3]
+    assert rep.buckets_processed == [b for b in range(N_BUCKETS) if b != 3]
+    ids = {r["doc_id"] for r in thin.select("doc_id").collect()}
+    golden = oracle.expected_corpus(generator.make_corpus(N_DOCS, seed=9))
+    assert _collect_spans(lake.read_spans_out()) == {
+        k: v for k, v in golden.items() if k in ids}
+    c = count_summary(lake)
+    assert c["docs"] == rep.doc_count == len(ids)
+    assert c["buckets"] == {"completed": N_BUCKETS} and c["runs"] == 2
+
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+NO_ERRORS_JOB = '''
+import sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import Observation, functions as F
+from pdf_extract_spark import build_spark, generator
+from pdf_extract_spark.lineage import Lake, count_summary, run_extraction_with_lineage
+from pdf_extract_spark.schemas import DOCUMENTS
+
+spark = build_spark(master="local[2]", shuffle_partitions=4)
+obs = Observation()
+spark.range(10).observe(obs, F.count("*").alias("n")).collect()
+assert obs.get["n"] == 10
+docs = spark.createDataFrame(generator.make_corpus(24, seed=5), schema=DOCUMENTS)
+rep = run_extraction_with_lineage(Lake(spark, "lake"), docs, "r1", n_buckets=4, group_size=2)
+assert rep.doc_count == 24
+assert count_summary(Lake(spark, "missing")) == {"docs": 0, "spans": 0, "runs": 0, "buckets": {}}
+spark.stop()
+print("NO_ERRORS_OK")
+'''
+
+
+def test_missing_tables_log_no_errors(tmp_path):
+    """Once a session has run an Observation, its query listener logs a
+    failed analysis as "ERROR ExecutionListenerBus" plus a stack trace.
+    A fresh lake and a missing one must be told apart by asking whether
+    the table exists, not by catching a failed read, so neither a first
+    lineage run nor count_summary on a missing lake logs an ERROR."""
+    job = tmp_path / "no_errors.py"
+    job.write_text(NO_ERRORS_JOB)
+    proc = subprocess.run(
+        [sys.executable, str(job), REPO],
+        cwd=str(tmp_path), capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "NO_ERRORS_OK" in proc.stdout
+    errors = [line for line in proc.stderr.splitlines() if " ERROR " in line]
+    assert errors == [], errors

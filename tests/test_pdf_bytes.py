@@ -55,7 +55,7 @@ def test_spark_pdf_to_spans_matches_oracle(spark):
     rows.append({"doc_id": "bad2", "content": bytearray(b"")})
     df = spark.createDataFrame(rows, schema="doc_id string, content binary")
 
-    out = layout.pdf_to_spans(df, num_partitions=4)
+    out = layout.pdf_to_spans(df)
     got = {
         r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]]
         for r in out.collect()
@@ -167,9 +167,9 @@ def test_pdf_split_parses_once_for_both_consumers(spark):
     rows.append({"doc_id": "junk", "content": bytearray(b"%PDF-1.4 garbage")})
     df = spark.createDataFrame(rows, schema="doc_id string, content binary")
 
-    healthy, quarantine = bytepath.split(L.pdf_to_spans_full(df, num_partitions=4))
+    healthy, quarantine = bytepath.split(L.pdf_to_spans_full(df))
     want = {r["doc_id"]: r["spans"]
-            for r in L.pdf_to_spans(df, num_partitions=4).collect()}
+            for r in L.pdf_to_spans(df).collect()}
     assert {r["doc_id"]: r["spans"] for r in healthy.collect()} == want
     errs = {r["doc_id"]: r["parse_error"] for r in quarantine.collect()}
     assert set(errs) == {"junk"}
