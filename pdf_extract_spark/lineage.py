@@ -388,9 +388,11 @@ def retry_bucket(
     retry with a different bucket count than the lake was built with
     would make the dynamic partition overwrite silently drop every doc
     whose old-scheme bucket is ``bucket`` but new-scheme bucket isn't
-    (and duplicate the converse), so a mismatch raises instead (one
-    cheap two-column scan with an early-out limit — the same guard
-    run_extraction_with_lineage applies to pre-bucketed inputs)."""
+    (and duplicate the converse), so a mismatch raises instead
+    (_validate_lake_scheme reads a SCHEME_SAMPLE_ROWS sample of the
+    stored rows — the same guard run_extraction_with_lineage applies;
+    a pre-bucketed input is checked separately by _with_bucket's full
+    scan)."""
     if not 0 <= bucket < n_buckets:
         raise ValueError(f"bucket must be in [0, {n_buckets}), got {bucket}")
     _validate_lake_scheme(lake, n_buckets)

@@ -237,8 +237,9 @@ FROM (SELECT doc_id, lang AS label_lang, {inner}, {best} AS best
 
 
 def fingerprint_col(text_col):
-    """The fingerprint as a reusable Column expression (streaming dedup
-    keys on it; ``fingerprint`` below is the relational packaging)."""
+    """The fingerprint as a reusable Column expression (curation's
+    snapshot diff keys on it; ``fingerprint`` below is the relational
+    packaging the ``fingerprint`` query exposes)."""
     toks = tokens(text_col if not isinstance(text_col, str) else F.col(text_col))
     tok_hashes = F.transform(toks, lambda x: phash(x) % F.lit(MOD))
     return F.aggregate(

@@ -13,8 +13,9 @@ its own (SURVEY.md §4.3):
      re-creatable partitions, which is also what the lineage checkpoint
      keys on;
   3. **checkpoint / resume** — per-bucket-group lineage rows appended to
-     the lake's ``lineage`` table; a resumed run anti-joins completed
-     buckets (see lineage.py).
+     the lake's ``lineage`` table; a resumed run plans from that table
+     alone: ``range(n_buckets)`` minus the completed buckets (see
+     lineage.py).
 
 The extraction itself is a single map-only Arrow stage (operators/extract).
 Giant documents take the same plan as every other document: one

@@ -19,12 +19,8 @@ differ.
 
 from __future__ import annotations
 
-import json
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.streaming.state import GroupStateTimeout
 
 from pdf_extract_spark.pipeline import run_extraction
 from pdf_extract_spark.schemas import DOCUMENTS
@@ -64,320 +60,6 @@ def incremental_extraction(
     return (
         docs.writeStream.foreachBatch(batch_sink(output_dir))
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-# --------------------------------------------------------------------------
-# custom stateful operator: streaming chunk assembler
-# --------------------------------------------------------------------------
-
-CHUNK_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("chunk_idx", T.IntegerType(), False),
-        T.StructField("n_chunks", T.IntegerType(), False),
-        T.StructField("payload", T.StringType(), False),  # JSON span list
-    ]
-)
-
-_ASSEMBLED = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("spans_json", T.StringType(), False),
-        T.StructField("status", T.StringType(), False),  # ok | malformed
-    ]
-)
-
-_STATE = T.StructType([T.StructField("chunks_json", T.StringType(), True)])
-
-
-def _assemble_fn(key, pdfs, state, tombstone_ttl_ms: int | None = None):
-    """applyInPandasWithState kernel: buffer span-chunks per doc_id across
-    micro-batches (arrival order arbitrary); once chunk indices 0..n-1 are
-    ALL present, run the full deterministic extraction on the reassembled
-    document and emit one ``status='ok'`` row, clearing the state.
-
-    Malformed inputs never raise inside the stateful kernel (that would
-    fail the whole streaming query): an out-of-range chunk_idx, an
-    n_chunks that contradicts earlier chunks of the same doc, or a
-    duplicate chunk_idx with a DIFFERENT payload quarantines the document
-    as one ``status='malformed'`` row (benign redelivery of an identical
-    chunk is accepted silently).
-
-    State is a single JSON blob {"expected": n, "chunks": {idx: payload}}
-    — tiny (the spans of ONE in-flight document), keyed per doc. BOTH
-    terminal outcomes leave a small TOMBSTONE state behind ({"done"} on
-    success, {"quarantined"} on malformed input) so chunks redelivered in
-    later batches — the normal case under an at-least-once replayable
-    source — are swallowed instead of rebuilding a fresh buffer and
-    eventually emitting a DUPLICATE output row (or a never-completable
-    buffer, for quarantined docs). Tombstones are a few bytes per
-    finished doc; a deployment with unbounded doc cardinality should add
-    a state timeout to bound retention: ``tombstone_ttl_ms`` (plumbed
-    from ``assemble_and_extract_stream(tombstone_ttl_seconds=...)``)
-    arms a ProcessingTimeTimeout on each TERMINAL state, and the timeout
-    invocation removes it. In-flight buffers never time out (they are
-    legitimately waiting for chunks). THE ACCEPTED TRADE: a chunk
-    replayed AFTER its doc's tombstone expired rebuilds a fresh buffer
-    and, if the full set is replayed, emits a duplicate output row — so
-    the TTL must exceed the source's replay horizon; downstream lineage
-    keyed on doc_id dedups stragglers. availableNow drains don't need a
-    TTL (default None = NoTimeout, tombstones retained forever)."""
-    from pdf_extract_spark import rules
-
-    (doc_id,) = key
-    if tombstone_ttl_ms is not None and state.hasTimedOut:
-        # an expired tombstone (only terminal states arm the timeout)
-        state.remove()
-        yield pd.DataFrame([], columns=["doc_id", "spans_json", "status"])
-        return
-
-    def _arm_ttl():
-        if tombstone_ttl_ms is not None:
-            state.setTimeoutDuration(tombstone_ttl_ms)
-
-    st = json.loads(state.get[0]) if state.exists else {}
-    if st.get("quarantined") or st.get("done"):
-        # terminal in an earlier batch: swallow redeliveries (emitting
-        # again would duplicate the doc's output row); re-arm the TTL —
-        # redelivery proves the replay horizon hasn't passed yet
-        state.update((json.dumps(st),))
-        _arm_ttl()
-        yield pd.DataFrame([], columns=["doc_id", "spans_json", "status"])
-        return
-    buffered: dict = st.get("chunks", {})
-    expected = st.get("expected")
-    error = None
-    for pdf in pdfs:
-        for ci, nc, payload in zip(
-            pdf["chunk_idx"].tolist(), pdf["n_chunks"].tolist(), pdf["payload"].tolist()
-        ):
-            ci, nc = int(ci), int(nc)
-            if expected is None:
-                expected = nc
-            if nc != expected or nc <= 0:
-                error = f"inconsistent n_chunks: {nc} vs {expected}"
-                break
-            if not (0 <= ci < expected):
-                error = f"chunk_idx {ci} out of range [0, {expected})"
-                break
-            prev = buffered.get(str(ci))
-            if prev is not None and prev != payload:
-                error = f"conflicting duplicate for chunk_idx {ci}"
-                break
-            buffered[str(ci)] = payload
-        if error:
-            break
-    if error is not None:
-        state.update((json.dumps({"quarantined": True}),))
-        _arm_ttl()
-        yield pd.DataFrame(
-            [{"doc_id": doc_id, "spans_json": json.dumps({"error": error}),
-              "status": "malformed"}]
-        )
-    elif expected is not None and set(buffered) >= {str(i) for i in range(expected)}:
-        # assembly parses payloads for the first time — an unparseable
-        # or non-span payload must quarantine like any other malformed
-        # input, not crash the streaming query through task retries
-        # (the module contract: malformed inputs never raise here)
-        try:
-            spans = []
-            for i in range(expected):
-                part = json.loads(buffered[str(i)])
-                if not isinstance(part, list):
-                    raise ValueError(f"chunk {i} payload is not a span list")
-                spans.extend(part)
-            out = rules.extract_document(spans)
-        except Exception as e:
-            state.update((json.dumps({"quarantined": True}),))
-            _arm_ttl()
-            yield pd.DataFrame(
-                [{"doc_id": doc_id,
-                  "spans_json": json.dumps(
-                      {"error": f"unparseable payload: {type(e).__name__}: {e}"}),
-                  "status": "malformed"}]
-            )
-            return
-        # done-tombstone, NOT state.remove(): under an at-least-once
-        # source a chunk replayed after completion must not rebuild a
-        # fresh buffer and emit a duplicate status='ok' row
-        state.update((json.dumps({"done": True}),))
-        _arm_ttl()
-        yield pd.DataFrame(
-            [{"doc_id": doc_id, "spans_json": json.dumps(out), "status": "ok"}]
-        )
-    else:
-        # in-flight buffer: deliberately NO timeout — it is waiting for
-        # its remaining chunks, however long that takes
-        state.update((json.dumps({"expected": expected, "chunks": buffered}),))
-        yield pd.DataFrame([], columns=["doc_id", "spans_json", "status"])
-
-
-def assemble_and_extract_stream(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    tombstone_ttl_seconds: int | None = None,
-) -> StreamingQuery:
-    """Chunked-arrival extraction: documents stream in as out-of-order
-    span-chunks (doc_id, chunk_idx, n_chunks, payload); a stateful
-    groupBy(doc_id).applyInPandasWithState operator assembles them and
-    emits each document's extracted spans exactly once, when complete.
-    The stateful analog of the reference's batch_progress accumulation
-    (/root/reference/database.py:76-93) as a true streaming operator.
-
-    ``tombstone_ttl_seconds`` bounds terminal-tombstone retention for
-    CONTINUOUS deployments with unbounded doc cardinality (see
-    _assemble_fn for the replay-horizon trade). Setting it switches the
-    trigger from availableNow to a processing-time micro-batch loop —
-    Spark does not support availableNow with processing-time timeouts
-    (the drain never terminates: it keeps scheduling state-cleanup
-    batches); a TTL'd query is long-running by definition, so the
-    caller stops it. The default ``None`` keeps NoTimeout +
-    availableNow — right for drains, where state dies with the run
-    anyway."""
-    chunks = spark.readStream.schema(CHUNK_SCHEMA).parquet(input_dir)
-    if tombstone_ttl_seconds is None:
-        fn, timeout = _assemble_fn, GroupStateTimeout.NoTimeout
-    else:
-        ttl_ms = int(tombstone_ttl_seconds) * 1000
-
-        def fn(key, pdfs, state):
-            yield from _assemble_fn(key, pdfs, state, tombstone_ttl_ms=ttl_ms)
-
-        timeout = GroupStateTimeout.ProcessingTimeTimeout
-    assembled = chunks.groupBy("doc_id").applyInPandasWithState(
-        fn,
-        outputStructType=_ASSEMBLED,
-        stateStructType=_STATE,
-        outputMode="append",
-        timeoutConf=timeout,
-    )
-    writer = (
-        assembled.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if tombstone_ttl_seconds is None:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="1 second")
-    return writer.start()
-
-
-# --------------------------------------------------------------------------
-# watermarked windowed metrics (late-data handling)
-# --------------------------------------------------------------------------
-
-DOC_EVENTS = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("n_spans", T.IntegerType(), False),
-        T.StructField("event_ts", T.TimestampType(), False),
-    ]
-)
-
-
-def windowed_doc_metrics(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    window_duration: str = "10 minutes",
-    watermark_delay: str = "10 minutes",
-) -> StreamingQuery:
-    """Streaming analog of the reference's batch_summary_stats
-    (/root/reference/database.py:96-125) as a WATERMARKED tumbling-window
-    aggregation: doc-completion events (doc_id, n_spans, event_ts) roll
-    up to docs/spans per event-time window.
-
-    Late-data semantics (the reason this is a streaming operator and not
-    a batch groupBy): events later than ``watermark_delay`` behind the
-    max seen event time are DROPPED; events within the delay update
-    their window's state; append mode emits each window exactly once,
-    when the watermark passes its end — so downstream consumers see
-    finalized, immutable window rows (tests/test_streaming.py)."""
-    ev = spark.readStream.schema(DOC_EVENTS).parquet(input_dir)
-    agg = (
-        ev.withWatermark("event_ts", watermark_delay)
-        .groupBy(F.window("event_ts", window_duration))
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_spans").cast("long").alias("n_spans"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "n_docs",
-            "n_spans",
-        )
-    )
-    return (
-        agg.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-# --------------------------------------------------------------------------
-# streaming ingest dedup (bounded state)
-# --------------------------------------------------------------------------
-
-DOC_ARRIVALS = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("ingest_ts", T.TimestampType(), False),
-    ]
-)
-
-
-def streaming_dedup_ingest(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    watermark_delay: str = "30 minutes",
-) -> StreamingQuery:
-    """Exact content dedup ON THE INGEST STREAM: arriving documents are
-    keyed by their rolling token fingerprint (textstats.fingerprint_col
-    — the same key the batch `fingerprint` query exposes) and duplicates
-    arriving within ``watermark_delay`` of the kept copy are dropped via
-    ``dropDuplicatesWithinWatermark``.
-
-    Why this shape survives an unbounded 100 TB crawl feed: the dedup
-    state holds one compact (fingerprint) entry per RETAINED key and the
-    watermark EVICTS entries once event time passes ingest_ts + delay —
-    state is bounded by the arrival rate × window, not by corpus size
-    (a plain streaming ``dropDuplicates`` would grow state forever). The
-    trade is explicit and standard for crawl pipelines: a re-crawled
-    page outside the window is re-admitted here and left to the batch
-    pass (`dedup_exact` / `dedup_keepfirst`, the full-corpus analog) —
-    the stream stage exists to cheaply absorb the bursty duplication
-    (mirrors, redeliveries, rapid re-crawls) that would otherwise bloat
-    the lake between batch passes. Kept rows flow through immediately
-    (dedup emits on arrival, unlike a windowed agg that waits for the
-    watermark), so downstream availableNow consumers see no added
-    latency."""
-    docs = spark.readStream.schema(DOC_ARRIVALS).parquet(input_dir)
-    from pdf_extract_spark.operators.textstats import fingerprint_col
-
-    keyed = docs.withColumn("fingerprint", fingerprint_col("text"))
-    deduped = keyed.withWatermark(
-        "ingest_ts", watermark_delay
-    ).dropDuplicatesWithinWatermark(["fingerprint"])
-    return (
-        deduped.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
         .trigger(availableNow=True)
         .start()
     )

@@ -5,6 +5,10 @@ The BASELINE.json invariant: per-document span-sequence equality on
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
+import pdf_extract_spark
 from pdf_extract_spark import generator, oracle
 from pdf_extract_spark.pipeline import run_extraction
 from pdf_extract_spark.schemas import DOCUMENTS
@@ -95,3 +99,25 @@ def test_empty_and_media_only_documents(spark):
 
     got_dups = sorted(_rows_spans(r) for r in rows if r["doc_id"] == "d_dup")
     assert got_dups == sorted(oracle.expected_corpus([d])["d_dup"] for d in dups)
+
+
+def test_extract_document_has_one_caller_path():
+    """One extraction path: inside the package only the Arrow kernel
+    (operators/extract.py) and the oracle reference
+    ``rules.extract_document``. Any other caller is a second extraction
+    path that skips the salted range partition; route it through
+    pipeline.run_extraction instead."""
+    root = Path(pdf_extract_spark.__file__).parent
+    allowed = {"operators/extract.py", "oracle.py"}
+    found = []
+    for path in root.rglob("*.py"):
+        rel = path.relative_to(root).as_posix()
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if (isinstance(node, ast.Attribute) and node.attr == "extract_document") or (
+                isinstance(node, ast.ImportFrom)
+                and any(a.name == "extract_document" for a in node.names)
+            ):
+                found.append((rel, node.lineno))
+    strays = sorted(f"{rel}:{line}" for rel, line in found if rel not in allowed)
+    assert not strays, strays
+    assert {rel for rel, _ in found} == allowed  # the walk still sees both callers
