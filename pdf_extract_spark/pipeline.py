@@ -19,7 +19,7 @@ its own (SURVEY.md §4.3):
 
 The extraction itself is a single map-only Arrow stage (operators/extract).
 Giant documents take the same plan as every other document: one
-rules.extract_document call per document, linear in its span count.
+rules.extract_columns call per document, linear in its span count.
 """
 
 from __future__ import annotations

@@ -20,10 +20,12 @@ hand or delegated to an LLM prompt:
   * text-heuristic header tagging for style-less span input (our own
     contract; documented inline)
 
-Both the Spark pandas-UDFs (pdf_extract_spark.operators.*) and the golden
-test oracle (pdf_extract_spark.oracle) import THIS module, so the span-
-sequence-equality tests verify the distributed plumbing, not two divergent
-rule implementations.
+Both the Spark UDFs (pdf_extract_spark.operators.*: the arrow_udf
+extraction kernel calls the span-column entry extract_columns, the layout
+pandas UDF the dict functions) and the golden test oracle
+(pdf_extract_spark.oracle) import THIS module, so the span-sequence-
+equality tests verify the distributed plumbing, not two divergent rule
+implementations.
 """
 
 from __future__ import annotations
@@ -153,9 +155,21 @@ def clean_fragment(t: str) -> str:
     Order matters and is part of the contract: dot-leaders first (they may
     create runs of whitespace), then bullet strip, then whitespace collapse.
     """
+    return _clean_and_key(t)[0]
+
+
+def _clean_and_key(t: str) -> tuple[str, str | None]:
+    """``clean_fragment(t)``, plus ``collapse_ws(t)`` when it comes free:
+    on the fast path (no cleanup trigger, which also means nothing for
+    collapse_ws to collapse) both are ``t.strip()``, and when only
+    whitespace triggered the cleanup both are the one collapse; otherwise
+    the second is None and is computed only if needed."""
     if not RE_CLEAN_TRIGGER.search(t):
-        return t.strip()
-    return collapse_ws(strip_bullet(strip_dot_leaders(t)))
+        s = t.strip()
+        return s, s
+    pre = strip_bullet(strip_dot_leaders(t))
+    clean = collapse_ws(pre)
+    return clean, clean if pre == t else None
 
 
 def strip_code_refs(t: str) -> str:
@@ -336,23 +350,29 @@ def reading_order_key(x0: float, y0: float, page_w: float) -> tuple:
 # run merge (W4) — merge adjacent same-tag headers
 # --------------------------------------------------------------------------
 
-def merge_consecutive_tags(frags: list[dict]) -> list[dict]:
-    """W4 — euaa_사례/pdf_to_json/main.py:18-74.
+def merge_columns(kinds: list, texts: list, media_refs: list) -> tuple[list, list, list]:
+    """W4 — euaa_사례/pdf_to_json/main.py:18-74, over fragment columns.
 
     Adjacent fragments with the same header tag (H1/H2/H3) merge into one,
     joined by a single space (dot-leaders already stripped). P and media
     fragments pass through and break any run.
-    Input/output: dicts with at least {kind, text, media_ref}.
     """
-    out: list[dict] = []
-    for f in frags:
-        k = f["kind"]
-        if out and k in HEADER_KINDS and out[-1]["kind"] == k:
-            out[-1] = dict(out[-1])
-            out[-1]["text"] = collapse_ws(out[-1]["text"] + " " + (f["text"] or ""))
+    out_k: list = []
+    out_t: list = []
+    out_m: list = []
+    for k, t, m in zip(kinds, texts, media_refs):
+        if out_k and k in HEADER_KINDS and out_k[-1] == k:
+            out_t[-1] = collapse_ws(out_t[-1] + " " + (t or ""))
         else:
-            out.append(f)
-    return out
+            out_k.append(k)
+            out_t.append(t)
+            out_m.append(m)
+    return out_k, out_t, out_m
+
+
+def merge_consecutive_tags(frags: list[dict]) -> list[dict]:
+    """``merge_columns`` over fragment dicts {kind, text, media_ref}."""
+    return _frag_dicts(*merge_columns(*_frag_columns(frags)))
 
 
 # --------------------------------------------------------------------------
@@ -472,66 +492,130 @@ def compose_sentences(p_texts: list[str]) -> list[str]:
 
 
 # --------------------------------------------------------------------------
-# boilerplate detection for the span path (F1 analog without geometry)
+# invalid UTF-8 in span strings
 # --------------------------------------------------------------------------
 
-def boilerplate_keys(texts: list[str]) -> set[str]:
-    """Running header/footer lines in a style-less document: short lines
-    whose collapsed form repeats >= BOILERPLATE_MIN_REPEATS times."""
-    c = Counter(collapse_ws(t) for t in texts if t and len(t) <= BOILERPLATE_MAX_LEN)
-    return {k for k, v in c.items() if k and v >= BOILERPLATE_MIN_REPEATS}
+def repair_utf8(raw: bytes) -> str:
+    """The text of span bytes that are not valid UTF-8: each invalid
+    sequence becomes U+FFFD (``bytes.decode`` "replace"). The Arrow
+    kernel applies it to a batch's strings only when the batch fails
+    UTF-8 validation, so one bad span cannot fail the job."""
+    return raw.decode("utf-8", "replace")
 
 
 # --------------------------------------------------------------------------
-# the documents-path contract: spans in -> spans out
+# the documents-path contract: span columns in -> span columns out
 # --------------------------------------------------------------------------
+#
+# The column functions are the implementation; the dict functions
+# (tag_fragments, merge_consecutive_tags, compose_fragments,
+# extract_document) wrap them for the oracle, the layout path and tests.
+# The Arrow kernel (operators/extract.py) calls extract_columns on the
+# flat children of a batch, so no per-span dict is ever built there.
 
-def tag_fragments(spans: list[dict]) -> list[dict]:
-    """Stages 1-4 of extract_document: order by offset, boilerplate strip,
-    per-fragment cleanup + empty drop, text-heuristic tagging. Returns
-    pre-merge fragments {kind, text, media_ref}.
+def tag_columns(kinds: list, texts: list, media_refs: list,
+                offsets: list) -> tuple[list, list, list]:
+    """Stages 1-4 of extract_columns: order by offset, boilerplate strip,
+    per-fragment cleanup + empty drop, text-heuristic tagging. Input: one
+    document's span columns (NULL span elements already removed). Returns
+    pre-merge fragment columns (kinds, texts, media_refs).
 
-    Exposed separately so the tagging stage can be measured on its own
-    (perfbench's ``rules.tag_spans_per_s`` probe).
-
-    NULL span elements (legal: SPANS is an array with containsNull) are
-    dropped before ordering: they yield no fragment and count toward no
-    boilerplate key."""
-    ordered = sorted((s for s in spans if s is not None), key=lambda s: s["offset"])
-    bp = boilerplate_keys([s["text"] or "" for s in ordered if s["kind"] == "text"])
-
-    frags: list[dict] = []
-    for s in ordered:
-        if s["kind"] == "media":
-            frags.append({"kind": "media", "text": "", "media_ref": s["media_ref"] or ""})
+    Each span's text is cleaned once, and its collapsed boilerplate key
+    is computed at most once (free when the cleanup fast path applies).
+    """
+    order = sorted(range(len(kinds)), key=offsets.__getitem__)
+    cleaned: list = []  # per ordered span: clean text (media: its ref)
+    keys: list = []  # per ordered span: collapse_ws(raw) or None if not yet known
+    counted: list = []  # keys of the spans that count toward boilerplate
+    for i in order:
+        kind = kinds[i]
+        if kind == "media":
+            cleaned.append(media_refs[i] or "")
+            keys.append(None)
             continue
-        raw = s["text"] or ""
-        if s["kind"] == "table":
+        raw = texts[i] or ""
+        clean, key = _clean_and_key(raw)
+        if kind == "text" and raw and len(raw) <= BOILERPLATE_MAX_LEN:
+            if key is None:
+                key = collapse_ws(raw)
+            counted.append(key)
+        cleaned.append(clean)
+        keys.append(key)
+    # running header/footer lines in a style-less document (F1 analog
+    # without geometry): short lines whose collapsed form repeats
+    bp = {k for k, v in Counter(counted).items() if k and v >= BOILERPLATE_MIN_REPEATS}
+
+    out_k: list = []
+    out_t: list = []
+    out_m: list = []
+    for j, i in enumerate(order):
+        kind = kinds[i]
+        t = cleaned[j]
+        if kind == "media":
+            out_k.append("media")
+            out_t.append("")
+            out_m.append(t)
+            continue
+        if kind == "table":
             # structural table spans (HTML <table> cells; the input-hint
             # twin of layout_document's grid cells): same cleanup, fixed
             # tag, NO boilerplate participation — table-ness is known
             # from structure, not repetition (mirrors the layout path,
             # where the grid test overrides style tagging)
-            t = clean_fragment(raw)
-            if t:
-                frags.append({"kind": "table", "text": t, "media_ref": ""})
-            continue
-        if collapse_ws(raw) in bp:
-            continue
-        t = clean_fragment(raw)
+            tag = "table"
+        else:
+            # any non-media span whose collapsed text is a key is dropped,
+            # counted or not (unknown kind, raw length over the cap)
+            if bp:
+                key = keys[j]
+                if (collapse_ws(texts[i] or "") if key is None else key) in bp:
+                    continue
+            tag = None
         if not t:
             continue
-        frags.append({"kind": tag_by_text(t), "text": t, "media_ref": ""})
-    return frags
+        out_k.append(tag or tag_by_text(t))
+        out_t.append(t)
+        out_m.append("")
+    return out_k, out_t, out_m
 
 
-def extract_document(spans: list[dict]) -> list[dict]:
+def compose_columns(kinds: list, texts: list, media_refs: list) -> tuple[list, list, list]:
+    """Stage 6 of extract_columns, reusable for the layout path: tagged
+    fragment columns -> final composed span columns, in output order."""
+    out_k: list = []
+    out_t: list = []
+    out_m: list = []
+    p_run: list = []
+
+    def flush() -> None:
+        sents = p_run if len(p_run) == 1 else compose_sentences(p_run)
+        out_k.extend(["P"] * len(sents))
+        out_t.extend(sents)
+        out_m.extend([""] * len(sents))
+        p_run.clear()
+
+    for k, t, m in zip(kinds, texts, media_refs):
+        if k == "P":
+            p_run.append(t)
+        else:
+            if p_run:
+                flush()
+            out_k.append(k)
+            out_t.append(t)
+            out_m.append(m)
+    if p_run:
+        flush()
+    return out_k, out_t, out_m
+
+
+def extract_columns(kinds: list, texts: list, media_refs: list,
+                    offsets: list) -> tuple[list, list, list]:
     """Full deterministic extraction for one document in ``input_hint``
-    shape. Input spans: {kind: text|media|table, text, media_ref, offset}
-    (``table`` arrives from structural sources — HTML <table> cells —
-    and passes the FSM 1:1 like headers, same as layout grid cells).
-    Output spans: {kind: H1|H2|H3|P|media|table, text, media_ref, offset}
-    with offset = final reading order (0-based), media interleaved in place.
+    shape, over span columns. Input kinds: text|media|table (``table``
+    arrives from structural sources — HTML <table> cells — and passes the
+    FSM 1:1 like headers, same as layout grid cells). Output columns (kinds, texts, media_refs) in final
+    reading order; kinds are H1|H2|H3|P|media|table, media interleaved in
+    place. A span's output offset is its position (0-based).
 
     Stages (mirror of the reference pipeline, SURVEY.md §3.3):
       1. order by input offset;
@@ -543,10 +627,46 @@ def extract_document(spans: list[dict]) -> list[dict]:
          headers pass through 1:1 (sentence_composer.py:515-526); a
          one-fragment P run passes through unchanged apart from cleanup
          (single-P passthrough, :533-537); media flushes the P buffer and
-         is emitted at its reading-order position;
-      7. renumber offsets 0..n-1.
+         is emitted at its reading-order position.
     """
-    return compose_fragments(merge_consecutive_tags(tag_fragments(spans)))
+    return compose_columns(*merge_columns(*tag_columns(kinds, texts, media_refs, offsets)))
+
+
+def _span_columns(spans: list) -> tuple[list, list, list, list]:
+    # NULL span elements (legal: SPANS is an array with containsNull)
+    # yield no fragment and count toward no boilerplate key
+    live = [s for s in spans if s is not None]
+    return ([s["kind"] for s in live], [s["text"] for s in live],
+            [s["media_ref"] for s in live], [s["offset"] for s in live])
+
+
+def _frag_columns(frags: list[dict]) -> tuple[list, list, list]:
+    return ([f["kind"] for f in frags], [f["text"] for f in frags],
+            [f["media_ref"] for f in frags])
+
+
+def _frag_dicts(kinds: list, texts: list, media_refs: list) -> list[dict]:
+    return [{"kind": k, "text": t, "media_ref": m}
+            for k, t, m in zip(kinds, texts, media_refs)]
+
+
+def _span_dicts(kinds: list, texts: list, media_refs: list) -> list[dict]:
+    return [{"kind": k, "text": t, "media_ref": m, "offset": i}
+            for i, (k, t, m) in enumerate(zip(kinds, texts, media_refs))]
+
+
+def tag_fragments(spans: list[dict]) -> list[dict]:
+    """``tag_columns`` over span dicts; returns pre-merge fragments
+    {kind, text, media_ref}. Exposed separately so the tagging stage can
+    be measured on its own (perfbench's ``rules.tag_spans_per_s``)."""
+    return _frag_dicts(*tag_columns(*_span_columns(spans)))
+
+
+def extract_document(spans: list[dict]) -> list[dict]:
+    """``extract_columns`` over span dicts {kind, text, media_ref, offset}
+    (NULL elements allowed); returns output spans {kind, text, media_ref,
+    offset} with offset = final reading order (0-based)."""
+    return _span_dicts(*extract_columns(*_span_columns(spans)))
 
 
 # --------------------------------------------------------------------------
@@ -671,29 +791,6 @@ def layout_document(pages: list[dict]) -> list[dict]:
 
 
 def compose_fragments(frags: list[dict]) -> list[dict]:
-    """Stage 6+7 of extract_document, reusable for the layout path:
-    tagged fragments -> final composed spans with 0-based offsets."""
-    out: list[dict] = []
-    p_run: list[str] = []
-
-    def flush() -> None:
-        if not p_run:
-            return
-        if len(p_run) == 1:
-            out.append({"kind": "P", "text": p_run[0], "media_ref": ""})
-        else:
-            for sent in compose_sentences(p_run):
-                out.append({"kind": "P", "text": sent, "media_ref": ""})
-        p_run.clear()
-
-    for f in frags:
-        if f["kind"] == "P":
-            p_run.append(f["text"])
-        else:
-            flush()
-            out.append({"kind": f["kind"], "text": f["text"], "media_ref": f["media_ref"]})
-    flush()
-    return [
-        {"kind": f["kind"], "text": f["text"], "media_ref": f["media_ref"], "offset": i}
-        for i, f in enumerate(out)
-    ]
+    """``compose_columns`` over fragment dicts, reusable for the layout
+    path: tagged fragments -> final composed spans with 0-based offsets."""
+    return _span_dicts(*compose_columns(*_frag_columns(frags)))

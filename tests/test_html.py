@@ -287,14 +287,14 @@ def test_table_spans_skip_boilerplate_strip():
 
 
 def test_vectorized_kernel_matches_rules_on_table_spans():
-    """The Arrow kernel (extract_spans.func) maps rules.extract_document
-    over a Series of span lists — on structural table spans (tag
-    passthrough, boilerplate exemption, cleanup + empty drop) it must
-    equal the oracle, map a NULL document to NULL and an empty one to
-    []."""
-    import pandas as pd
+    """The Arrow kernel (extract_spans.func) runs rules.extract_columns
+    over the flat span columns of an Arrow batch — on structural table
+    spans (tag passthrough, boilerplate exemption, cleanup + empty drop)
+    it must equal the oracle, map a NULL document to NULL and an empty
+    one to []."""
+    import pyarrow as pa
     from pdf_extract_spark import rules
-    from pdf_extract_spark.operators.extract import extract_spans
+    from pdf_extract_spark.operators.extract import SPANS_ARROW, extract_spans
 
     mixed = [
         {"kind": "text", "text": "intro paragraph body text", "media_ref": "", "offset": 0},
@@ -312,7 +312,9 @@ def test_vectorized_kernel_matches_rules_on_table_spans():
         {"kind": "text", "text": "real body sentence text", "media_ref": "", "offset": 4},
     ]
     docs = [mixed, None, [], bp]
-    got = extract_spans.func(pd.Series(docs)).tolist()
+    got = extract_spans.func(pa.array(docs, type=SPANS_ARROW))
+    assert got.type == SPANS_ARROW
+    got = got.to_pylist()
     want = [rules.extract_document(d) if d is not None else None for d in docs]
     assert got == want
     assert [s["kind"] for s in got[0]] == ["P", "table", "table", "media", "P"]

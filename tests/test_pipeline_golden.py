@@ -101,23 +101,82 @@ def test_empty_and_media_only_documents(spark):
     assert got_dups == sorted(oracle.expected_corpus([d])["d_dup"] for d in dups)
 
 
-def test_extract_document_has_one_caller_path():
-    """One extraction path: inside the package only the Arrow kernel
-    (operators/extract.py) and the oracle reference
-    ``rules.extract_document``. Any other caller is a second extraction
-    path that skips the salted range partition; route it through
-    pipeline.run_extraction instead."""
+def _references(name: str) -> set[tuple[str, str, int]]:
+    """(module, enclosing function, line) of every reference to ``name``
+    in the package: an ``x.<name>`` attribute, a bare ``<name>``, or a
+    ``from .. import <name>``. The enclosing function is the outermost
+    ``def`` around it, or "<module>"."""
     root = Path(pdf_extract_spark.__file__).parent
-    allowed = {"operators/extract.py", "oracle.py"}
-    found = []
+    found = set()
+
+    def walk(node, rel, fn):
+        if (isinstance(node, ast.Attribute) and node.attr == name) or (
+            isinstance(node, ast.Name) and node.id == name
+        ) or (isinstance(node, ast.ImportFrom) and any(a.name == name for a in node.names)):
+            found.add((rel, fn, node.lineno))
+        if fn == "<module>" and isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        for child in ast.iter_child_nodes(node):
+            walk(child, rel, fn)
+
     for path in root.rglob("*.py"):
-        rel = path.relative_to(root).as_posix()
-        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
-            if (isinstance(node, ast.Attribute) and node.attr == "extract_document") or (
-                isinstance(node, ast.ImportFrom)
-                and any(a.name == "extract_document" for a in node.names)
-            ):
-                found.append((rel, node.lineno))
-    strays = sorted(f"{rel}:{line}" for rel, line in found if rel not in allowed)
-    assert not strays, strays
-    assert {rel for rel, _ in found} == allowed  # the walk still sees both callers
+        walk(ast.parse(path.read_text(), filename=str(path)),
+             path.relative_to(root).as_posix(), "<module>")
+    return found
+
+
+def test_extract_document_has_one_caller_path():
+    """One extraction path: inside the package only the oracle references
+    ``rules.extract_document``, and only the Arrow kernel
+    (``operators/extract.py:_extract``) and ``rules.extract_document``
+    reference the column entry ``rules.extract_columns`` they both run.
+    Any other caller is a second extraction path that skips the salted
+    range partition; route it through pipeline.run_extraction instead."""
+    for name, allowed in (
+        ("extract_document", {("oracle.py", "expected_spans")}),
+        ("extract_columns", {("operators/extract.py", "_extract"),
+                             ("rules.py", "extract_document")}),
+    ):
+        found = _references(name)
+        strays = sorted(f"{rel}:{line} ({fn})" for rel, fn, line in found
+                        if (rel, fn) not in allowed)
+        assert not strays, (name, strays)
+        assert {(rel, fn) for rel, fn, _ in found} == allowed  # the walk still sees each caller
+
+
+def test_invalid_utf8_span_text_is_repaired_not_fatal(spark):
+    """One invalid UTF-8 sequence in a span string used to fail the whole
+    job (pyarrow "Wrapping ... failed"). The kernel now repairs the
+    batch's strings through rules.repair_utf8: the output equals the
+    oracle over the repaired text, and healthy documents beside it are
+    untouched."""
+    from pyspark.sql import functions as F
+
+    from pdf_extract_spark import rules
+
+    planted = {"FF": b"A\xffB", "ED": b"a\xed\xa0\x80b", "C3": b"Cut \xc3"}
+    bad = {"doc_id": "d_bad_utf8", "spans": [
+        {"kind": "text", "text": "HEX:" + planted["FF"].hex(), "media_ref": "", "offset": 0},
+        {"kind": "text", "text": "Healthy sentence here.", "media_ref": "", "offset": 1},
+        {"kind": "text", "text": "HEX:" + planted["ED"].hex(), "media_ref": "", "offset": 2},
+        {"kind": "text", "text": "HEX:" + planted["C3"].hex(), "media_ref": "", "offset": 3},
+        {"kind": "media", "text": "", "media_ref": "HEX:" + planted["FF"].hex(), "offset": 4},
+    ]}
+    docs = generator.make_corpus(6, seed=SEED) + [bad]
+
+    def unhex(c):
+        return F.when(c.startswith("HEX:"),
+                      F.unhex(F.regexp_replace(c, "^HEX:", "")).cast("string")).otherwise(c)
+
+    df = spark.createDataFrame(docs, schema=DOCUMENTS).select("doc_id", F.transform(
+        "spans", lambda s: s.withField("text", unhex(s.text))
+                            .withField("media_ref", unhex(s.media_ref))).alias("spans"))
+    got = _collect_spans(run_extraction(df, num_partitions=2))
+
+    def repaired(v):
+        return rules.repair_utf8(bytes.fromhex(v[4:])) if v.startswith("HEX:") else v
+
+    fixed = dict(bad, spans=[dict(s, text=repaired(s["text"]), media_ref=repaired(s["media_ref"]))
+                             for s in bad["spans"]])
+    assert got == oracle.expected_corpus(docs[:-1] + [fixed])
+    assert "\ufffd" in "".join(t for _, t, _, _ in got["d_bad_utf8"])

@@ -110,7 +110,9 @@ def test_run_merge_preserves_order_and_nonheaders(frags_in):
 def test_clean_trigger_fast_path_equivalence():
     """Soundness of the fast paths inside rules.clean_fragment and
     rules.collapse_ws (strip-only when RE_CLEAN_TRIGGER / RE_NEEDS_COLLAPSE
-    miss): both must equal the unguarded regex chain on every string."""
+    miss): both must equal the unguarded regex chain on every string, and
+    the boilerplate key rules._clean_and_key hands out for free must be
+    collapse_ws of the raw text whenever it is not None."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
@@ -123,6 +125,8 @@ def test_clean_trigger_fast_path_equivalence():
             "", rules.RE_DOT_LEADER.sub("", t)))).strip()
         assert rules.clean_fragment(t) == chain, repr(t)
         assert rules.collapse_ws(t) == rules.RE_WS.sub(" ", t).strip(), repr(t)
+        clean, key = rules._clean_and_key(t)
+        assert clean == chain and key in (None, rules.RE_WS.sub(" ", t).strip()), repr(t)
 
     check()
 
@@ -152,40 +156,92 @@ def test_compose_inline_completion_equals_is_complete():
 
 
 def test_extract_batch_matches_rules_for_arbitrary_kinds():
-    """The Arrow kernel (extract_spans.func) maps rules.extract_document
-    over a Series of span lists; its output must equal the oracle for
-    UNEXPECTED kind values too: rules.tag_fragments sends only
+    """The Arrow kernel (extract_spans.func) runs rules.extract_columns
+    over the flat span columns of a batch; its output must equal the
+    oracle for UNEXPECTED kind values too (rules sends only
     kind=='media' down the media branch — any other kind takes the text
-    path, and only kind=='text' counts toward boilerplate keys."""
-    import pandas as pd
+    path, and only kind=='text' counts toward boilerplate keys), for NULL
+    lists, NULL elements, NULL text and media_ref, empty lists, for a
+    sliced batch whose list offsets do not start at 0, and for the
+    all-nullable struct type a parquet-read input arrives with."""
+    import pyarrow as pa
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
     from pdf_extract_spark import rules
-    from pdf_extract_spark.operators.extract import extract_spans
+    from pdf_extract_spark.operators.extract import SPANS_ARROW, extract_spans
 
-    span_st = st.fixed_dictionaries({
-        "kind": st.sampled_from(["text", "media", "image", "x", ""]),
+    span_st = st.one_of(st.none(), st.fixed_dictionaries({
+        "kind": st.sampled_from(["text", "media", "image", "table", "x", ""]),
         # alphabet reaches every tag branch: digits + dots (H1/H2
         # numbering), colon (H3), uppercase (ALLCAPS), terminals,
         # bullets/stars/ws (cleanup chain)
-        "text": st.text(
-            alphabet=st.sampled_from(list("aB1. :?!*-\t")), max_size=14
-        ),
-        "media_ref": st.sampled_from(["", "m:1"]),
-    })
+        "text": st.one_of(st.none(), st.text(
+            alphabet=st.sampled_from(list("aB1. :?!*-\t")), max_size=14)),
+        "media_ref": st.sampled_from(["", "m:1", None]),
+        "offset": st.integers(0, 5),
+    }))
+    doc_st = st.one_of(st.none(), st.lists(span_st, max_size=8))
 
     @settings(max_examples=400, deadline=None)
-    @given(st.lists(st.lists(span_st, max_size=8), min_size=1, max_size=4))
-    def check(docs):
-        docs = [
-            [dict(s, offset=i) for i, s in enumerate(spans)] for spans in docs
-        ]
-        got = extract_spans.func(pd.Series(docs)).tolist()
-        exp = [rules.extract_document(spans) for spans in docs]
+    @given(st.lists(doc_st, min_size=1, max_size=6), st.data())
+    def check(docs, data):
+        start = data.draw(st.integers(0, len(docs) - 1))
+        stop = data.draw(st.integers(start, len(docs)))
+        batch = pa.array(docs, type=SPANS_ARROW).slice(start, stop - start)
+        if data.draw(st.booleans()):
+            batch = batch.cast(pa.list_(pa.struct(
+                [f.with_nullable(True) for f in SPANS_ARROW.value_type])))
+        got = extract_spans.func(batch).to_pylist()
+        exp = [rules.extract_document(d) if d is not None else None
+               for d in docs[start:stop]]
         assert got == exp, docs
 
     check()
+
+
+def test_extract_spans_accepts_a_pandas_series_of_span_lists():
+    """perfbench's kernel probe calls extract_spans.func on a pandas
+    Series of span-dict lists: it converts at entry and gives the same
+    output as the Arrow batch, NULL and empty documents included."""
+    import pandas as pd
+    import pyarrow as pa
+
+    from pdf_extract_spark import generator
+    from pdf_extract_spark.operators.extract import SPANS_ARROW, extract_spans
+
+    docs = [generator.make_document(i, seed=3)["spans"] for i in range(6)]
+    docs[2:2] = [None, []]
+    from_series = extract_spans.func(pd.Series(docs))
+    assert from_series.equals(extract_spans.func(pa.array(docs, type=SPANS_ARROW)))
+    assert from_series.to_pylist() == [
+        rules.extract_document(d) if d is not None else None for d in docs]
+    # a batch of only empty documents still has the SPANS type
+    assert extract_spans.func(pd.Series([[], []])).to_pylist() == [[], []]
+
+
+def test_extract_spans_repairs_invalid_utf8():
+    """A span string that is not valid UTF-8 does not fail the batch: the
+    kernel decodes the batch's strings through rules.repair_utf8 and the
+    output equals the oracle over the repaired text."""
+    import pyarrow as pa
+
+    from pdf_extract_spark.operators.extract import SPANS_ARROW, extract_spans
+
+    raw = [b"Broken \xff byte.", b"Lone \xed\xa0\x80 surrogate.", b"Cut \xc3", b"Fine."]
+    kinds = pa.array(["text"] * 4 + ["media"])
+    texts = pa.array(raw + [b""], pa.binary()).view(pa.string())
+    refs = pa.array([b""] * 4 + [b"m\xff"], pa.binary()).view(pa.string())
+    values = pa.StructArray.from_arrays(
+        [kinds, texts, refs, pa.array(range(5), pa.int32())],
+        fields=list(SPANS_ARROW.value_type))
+    batch = pa.ListArray.from_arrays(pa.array([0, 5], pa.int32()), values, type=SPANS_ARROW)
+    repaired = [{"kind": k, "text": rules.repair_utf8(t), "media_ref": rules.repair_utf8(m),
+                 "offset": i}
+                for i, (k, t, m) in enumerate(zip(kinds.to_pylist(), raw + [b""],
+                                                  [b""] * 4 + [b"m\xff"]))]
+    assert rules.repair_utf8(b"Cut \xc3") == "Cut \ufffd"
+    assert extract_spans.func(batch).to_pylist() == [rules.extract_document(repaired)]
 
 
 def test_boilerplate_drop_covers_uncounted_spans():
@@ -193,10 +249,9 @@ def test_boilerplate_drop_covers_uncounted_spans():
     is a boilerplate key — including spans that did NOT count toward the
     keys (unknown kind, or raw length over the cap). The Arrow kernel
     (extract_spans.func) must agree."""
-    import pandas as pd
+    import pyarrow as pa
 
-    from pdf_extract_spark import rules
-    from pdf_extract_spark.operators.extract import extract_spans
+    from pdf_extract_spark.operators.extract import SPANS_ARROW, extract_spans
 
     hdr = "hdr line"
     docs = [
@@ -219,7 +274,7 @@ def test_boilerplate_drop_covers_uncounted_spans():
             {"kind": "text", "text": "Kept sentence.", "media_ref": "", "offset": 4},
         ],
     ]
-    got = extract_spans.func(pd.Series(docs)).tolist()
+    got = extract_spans.func(pa.array(docs, type=SPANS_ARROW)).to_pylist()
     exp = [rules.extract_document(spans) for spans in docs]
     assert got == exp
     assert [s["text"] for s in got[0]] == ["Real sentence."]

@@ -115,7 +115,9 @@ def test_fsm_residual_kept():
 
 def test_boilerplate_keys():
     texts = ["Header X", "body text one.", "Header X", "other.", "Header X"]
-    assert rules.boilerplate_keys(texts) == {"Header X"}
+    spans = [{"kind": "text", "text": t, "media_ref": "", "offset": i}
+             for i, t in enumerate(texts)]
+    assert [f["text"] for f in rules.tag_fragments(spans)] == ["body text one.", "other."]
 
 
 def test_extract_document_end_to_end():

@@ -34,7 +34,7 @@ def test_balanced_preserves_null_spans_rows(spark):
 
 
 def test_boilerplate_length_gate_uses_raw_text(spark):
-    """rules.boilerplate_keys gates on RAW length (<= 80) before
+    """rules.tag_columns gates boilerplate keys on RAW length (<= 80) before
     collapsing; a line whose raw form exceeds the cap but collapses short
     must NOT be counted as boilerplate — kernel/oracle/SQL-mirror parity."""
     from pyspark.sql import types as T
