@@ -11,12 +11,8 @@ ONE JSON line::
 Each query is forced end-to-end with the ``noop`` sink (full computation,
 no driver collect, no disk write skew).
 
-``--scaling`` mode evidences the BASELINE.json N -> 4N throughput-scaling
-criterion inside this single-machine sandbox: it re-executes the flagship
-extraction job in fresh taskset-pinned subprocesses at several
-parallelism levels (2, 8 and 32 cores by default) over the SAME input
-and reports throughput at each plus the pairwise scaling efficiency
-``(t_N / t_4N) / (4N / N)`` into BENCH.md.
+Flagship throughput, N -> 4N scaling and lake durability are measured by
+``perfbench/run.py`` (``BENCHMARK.json``), not here.
 """
 
 from __future__ import annotations
@@ -24,7 +20,6 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import subprocess
 import sys
 import time
 
@@ -181,675 +176,11 @@ def run_suite(sf_dir: str, cpus: str) -> dict:
     }
 
 
-# ---------------------------------------------------------------- recall
-
-def measure_recalls(sf_dir: str) -> dict:
-    """Measure the ANN recall figures BENCH.md reports (ADVICE r3: never
-    embed them as literals — a stale table misrepresents the benchmarked
-    corpus). Runs after the pinned scaling subprocesses so nothing
-    shares the machine with them. Returns {"flat": {...}, "clustered":
-    {...}, "sf": ...} — both corpora are deterministic, so these numbers
-    are reproducible by the same-named pytest cases."""
-    from pdf_extract_spark.operators import similarity as S
-    from pdf_extract_spark.session import build_spark
-
-    spark = build_spark(app_name="bench_recall")
-    try:
-        return {
-            "flat": S.measure_ann_recall(spark, sf_dir),
-            "clustered": S.measure_clustered_ivf_recall(spark),
-            "sf": _sf_of(sf_dir),
-        }
-    finally:
-        spark.stop()
-
-
-# ---------------------------------------------------------------- scaling
-
-def _synth_docs(spark, n_docs: int, n_parts: int):
-    """The ONE synthetic generator-corpus input both --scaling and
-    --durability measure (seed 42, ~350 spans/doc incl. 5% giant skew),
-    built DISTRIBUTED on the executors via mapInPandas — two copies of
-    this closure previously had to stay identical by discipline."""
-    import pandas as pd
-
-    from pdf_extract_spark.schemas import DOCUMENTS
-
-    def gen(batches):
-        from pdf_extract_spark import generator
-
-        for pdf in batches:
-            rows = [generator.make_document(int(i), seed=42) for i in pdf["id"]]
-            yield pd.DataFrame(rows)
-
-    return spark.range(n_docs).repartition(n_parts).mapInPandas(gen, schema=DOCUMENTS)
-
-
-def run_flagship_once(sf_dir: str, cpus: str, mult: int) -> dict:
-    """One measured flagship run (used as the --scaling subprocess body).
-
-    The input is the synthetic generator corpus (~350 spans/doc, 5%
-    giant skew docs), generated DISTRIBUTED on the executors via
-    mapInPandas and cached before the timed region, so the measurement is
-    the extraction stage itself. ``mult`` scales document count
-    (``mult * 1000`` docs).
-    """
-    os.environ["SPARK_GRAFT_CPUS"] = cpus
-    import pandas as pd
-
-    from pdf_extract_spark.pipeline import run_extraction
-    from pdf_extract_spark.schemas import DOCUMENTS
-    from pdf_extract_spark.session import build_spark
-
-    spark = build_spark(app_name=f"bench_scaling_local[{cpus}]")
-    docs = _synth_docs(spark, mult * 1000, int(cpus) * 4).cache()
-    n_docs = docs.count()  # materialize input outside the timed region
-
-    # explicit partition count (3x cores): REPARTITION_BY_NUM pins the
-    # exchange so AQE cannot coalesce the modest local shuffle down to a
-    # handful of partitions and strangle UDF parallelism — on a real
-    # cluster the same knob is set from executor count.
-    parts = int(cpus) * 3
-    _force(run_extraction(docs, num_partitions=parts))  # warmup
-    t0 = time.perf_counter()
-    _force(run_extraction(docs, num_partitions=parts))
-    elapsed = time.perf_counter() - t0
-    return {
-        "cpus": int(cpus),
-        "n_docs": n_docs,
-        "sec": round(elapsed, 3),
-        "docs_per_sec": round(n_docs / elapsed, 2),
-    }
-
-
-def run_scaling(sf_dir: str, levels: list[int], mult: int) -> dict:
-    """Each parallelism level runs in a fresh subprocess PINNED to that
-    many physical cores (taskset), so ``local[8]`` really is an 8-core
-    machine — otherwise Python UDF workers spill onto the other 24 cores
-    and the comparison measures nothing."""
-    if len(levels) < 2:
-        raise ValueError(
-            f"--scaling needs at least two --levels to compute an "
-            f"efficiency pair, got {levels}"
-        )
-    runs = []
-    for cpus in levels:
-        cmd = [
-            sys.executable,
-            os.path.abspath(__file__),
-            "--flagship-once",
-            "--cpus",
-            str(cpus),
-            "--sf-dir",
-            sf_dir,
-            "--mult",
-            str(mult),
-        ]
-        import shutil
-
-        taskset = shutil.which("taskset")
-        if taskset is None:
-            # BENCH.md asserts the runs were pinned; unpinned local[8]
-            # workers spill onto every core and the comparison measures
-            # nothing — fail loudly rather than record invalid evidence
-            raise RuntimeError(
-                "taskset not found: --scaling requires core pinning "
-                "(install util-linux or run the levels manually)"
-            )
-        cmd = [taskset, "-c", f"0-{cpus - 1}"] + cmd
-        out = subprocess.run(cmd, capture_output=True, text=True, check=True)
-        runs.append(json.loads(out.stdout.strip().splitlines()[-1]))
-    pairs = []
-    for a, b in zip(runs, runs[1:]):
-        ratio = b["cpus"] / a["cpus"]
-        pairs.append(
-            {
-                "from": a["cpus"],
-                "to": b["cpus"],
-                "efficiency": round((a["sec"] / b["sec"]) / ratio, 3),
-            }
-        )
-    return {
-        "metric": "flagship scaling efficiency",
-        "value": pairs[0]["efficiency"],
-        "unit": "fraction",
-        "criterion": ">= 0.8 from N to 4N parallelism (BASELINE.json)",
-        "runs": runs,
-        "pairs": pairs,
-        "sf": _sf_of(sf_dir),
-        "mult": mult,
-    }
-
-
-def write_bench_md(result: dict) -> None:
-    lines = [
-        "# BENCH — N → 4N scaling evidence",
-        "",
-        "The BASELINE.json north rule requires throughput scaling efficiency",
-        "≥ 0.8 between cluster sizes N and 4N executors. No real cluster",
-        "exists in this sandbox, so per the driver instructions the SAME",
-        "flagship extraction job (salt → repartitionByRange → map-only Arrow",
-        "extraction stage, pdf_extract_spark/pipeline.py) is run at several",
-        "local parallelism levels over the identical cached input (the",
-        "generator corpus, ~350 spans/doc incl. 5% giant skew docs), each in",
-        "a fresh subprocess PINNED via `taskset` to exactly that many",
-        "physical cores, timed after a warmup pass.",
-        "",
-        "| parallelism (pinned cores) | docs | wall sec | docs/sec |",
-        "|---|---|---|---|",
-    ]
-    for r in result["runs"]:
-        lines.append(
-            f"| local[{r['cpus']}] | {r['n_docs']} | {r['sec']} | {r['docs_per_sec']} |"
-        )
-    lines.append("")
-    for p in result["pairs"]:
-        verdict = "PASS" if p["efficiency"] >= 0.8 else "see note"
-        lines.append(
-            f"**Scaling efficiency {p['from']} → {p['to']} cores:** "
-            f"`(t_N / t_4N) / {int(p['to'] / p['from'])}` = **{p['efficiency']}** "
-            f"(criterion ≥ 0.8: {verdict})"
-        )
-        lines.append("")
-    rec = result.get("recalls", {})
-    flat = rec.get("flat", {})
-    clus = rec.get("clustered", {})
-    rsf = rec.get("sf", "?")
-
-    def _r(d, key):
-        v = d.get(key)
-        return "n/m" if v is None else f"{v}"
-
-    lines += [
-        "## ANN accuracy/cost trade (recall@10 vs brute-force cosine)",
-        "",
-        f"MEASURED in this bench run on the sf{rsf} embeddings (50 queries,",
-        "k=10, dim 64; fully deterministic — md5-derived hyperplanes and",
-        "centroid seeds; reproduce with",
-        "tests/test_similarity_ann.py::test_ann_recall_measured):",
-        "",
-        "| variant | candidate structure | recall@10 |",
-        "|---|---|---|",
-        f"| ann_lsh_topk | one 8-plane sign-LSH table (256 buckets) | {_r(flat, 'lsh')} |",
-        f"| ann_lsh_multiprobe | + Hamming-1 probes (9 buckets/query) | {_r(flat, 'multiprobe')} |",
-        f"| ann_lsh_multitable | 4 tables x 4 planes, any-collision | {_r(flat, 'multitable')} |",
-        f"| ann_ivf_fixed_topk | 8 UNTRAINED seed cells, probe 2 | {_r(flat, 'ivf_fixed')} |",
-        f"| ann_ivf_topk | 8 Lloyd-trained cells, probe 2 | {_r(flat, 'ivf')} |",
-        "| cosine_topk | exact cross join (the ground truth) | 1.00 |",
-        "",
-        "The synthetic embeddings are weakly clustered, the hardest regime",
-        "for sign-LSH (true neighbours rarely agree on many sign bits);",
-        "distance-based IVF dominates. Honest footnote: the UNTRAINED seed",
-        "quantizer is competitive with (at some scales slightly ahead of)",
-        "the Lloyd-trained one HERE — with weak clusters, training pulls",
-        "centroids toward the global mean and trades probe diversity for",
-        "within-cell fit. The claim that training pays on genuinely",
-        "clustered corpora is MEASURED, not asserted: on the",
-        "planted-cluster corpus (8 Gaussian clusters, degenerate",
-        "near-duplicate seeding prefix — similarity.make_clustered_embeddings,",
-        "reproduce with",
-        "tests/test_similarity_ann.py::test_trained_ivf_wins_on_clustered_corpus):",
-        "",
-        "| corpus | ann_ivf_topk (trained) | ann_ivf_fixed_topk (untrained) |",
-        "|---|---|---|",
-        f"| planted clusters | {_r(clus, 'ivf')} | {_r(clus, 'ivf_fixed')} |",
-        "",
-        "ann_ivf_fixed exists primarily as the value-exact oracle for the",
-        "probe/rank machinery. All",
-        "variants bound shuffle volume by bucket/cell size — none cross",
-        "joins — so the recall column is the only cost of scale.",
-        "",
-        "## Why the low-core pair is the cluster-representative one",
-        "",
-        "The extraction stage is one mandated range-repartition shuffle",
-        "followed by embarrassingly parallel Arrow batches — no join or",
-        "aggregation in the hot path. Measured OUTSIDE Spark (raw",
-        "multiprocessing over the same kernel on the same corpus), the",
-        "pure-Python/pandas extraction kernel itself scales 1→8 pinned",
-        "cores at ~0.85 efficiency but only ~0.54 from 8→32, because a",
-        "single socket's DRAM bandwidth saturates — the string-heavy",
-        "vectorized kernel is memory-bound beyond ~8-16 concurrent workers",
-        "on this one machine. That ceiling is a property of the sandbox",
-        "hardware, not of the job graph: on a real cluster, N → 4N",
-        "EXECUTORS multiplies memory channels along with cores (each node",
-        "brings its own DRAM), which is exactly the regime the low-core",
-        "pair emulates (each added core still has headroom). The 8→32",
-        "single-box pair is reported for transparency.",
-        "",
-        f"Raw: `{json.dumps(result)}`",
-        "",
-    ]
-    dur_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_DURABILITY.json"
-    )
-    if os.path.exists(dur_path):
-        with open(dur_path) as f:
-            d = json.load(f)
-        lines += [
-            "## Durability run (64k docs, checkpointed end-to-end)",
-            "",
-            f"{d['n_docs']:,} generator documents ({d['n_spans']:,} output spans)".replace(",", " "),
-            "written bucket-partitioned (the parquet analog of Iceberg's",
-            "`bucket(doc_id)` transform), then extracted through the FULL",
-            f"lineage pipeline — {d['n_buckets']} hash buckets committed in",
-            f"{d['n_groups']} groups with per-group metrics and",
-            "dynamic-partition-overwrite output — in",
-            f"**{d['partitioned_sec']} s wall (~{d['docs_per_sec']} docs/s) at"
-            f" {d['cpus']} cores**, every document present exactly once.",
-            "Unlike the scaling table above (noop sink), this includes the",
-            "durable parquet write of the full span output and every",
-            "checkpoint commit. The per-group filter reaches the scan as a",
-            f"PARTITION FILTER (plan-verified: {d.get('partition_filters_pushed')}),",
-            "so each commit group reads only its own buckets of the ingested",
-            "table. At THIS local scale the input is ~60 MB and largely",
-            "page-cached, so the pruning effect on wall clock sits inside",
-            "the sandbox's ±20-30% run-to-run noise band (unpartitioned",
-            f"control: {d['unpartitioned_sec']} s, "
-            f"{round((d['unpartitioned_sec'] / d['partitioned_sec'] - 1) * 100):+d}% "
-            "this run — the sign has flipped across rounds); what the run",
-            "proves here is pushdown + exactly-once, not a speedup.",
-            "Pruning pays at petabyte inputs,",
-            "where unpruned lineage IO is O(groups x corpus) instead of",
-            "O(corpus). (An earlier figure showing a large gap measured a",
-            "non-materialized generator input being recomputed per group —",
-            "a different, avoidable pathology.)",
-            "",
-            f"Reproduce: `python bench.py --durability` (raw: `{json.dumps(d)}`)",
-            "",
-        ]
-    lines += [
-        "## Suite growth across rounds (read before comparing BENCH_r{N}.json wall times)",
-        "",
-        "The headline suite is cumulative: 26 queries in r2, 29 in r3, 35 at",
-        "the end of r4 (added across r4: table_detect, decontaminate,",
-        "html_extract, link_domains, url_dedup_hosts, line_dedup — the last",
-        "four are the new HTML/web-curation leg), 41 in r5 (added:",
-        "domain_cap_kept and web_curate — so the salted two-phase domain",
-        "cap has recorded numbers to regress against, VERDICT r4 item 6 —",
-        "curate_corpus_full, the line-dedup -> pii-scrub -> capped",
-        "curation chain under one composed oracle; ngram_topk, the corpus",
-        "boilerplate miner; temperature_sample, the corpus-derived",
-        "multilingual mixing rule; and host_pagerank, the fixed-point",
-        "integer link-graph centrality pass), then 47 late in r5 (added:",
-        "quality_buckets, the CCNet LM-surprisal quartile bucketing —",
-        "two corpus passes, train + score; url_blocklist, the UT1-style",
-        "domain blocklist as a bounded suffix hash join; upsample_mix,",
-        "Dolma-style weighted upsampling via map-only epoch explode;",
-        "chunk_documents, fixed-token-window chunking with stride; and",
-        "corpus_diff, the between-ingests snapshot diff as a",
-        "fingerprint-only full outer join; and substring_overlap,",
-        "winnowing passage-overlap candidate pairs as an fp-keyed",
-        "id-only self-join), then 49 (added: c4_clean, the C4",
-        "line/page cleaning rules as one map-only zero-Exchange",
-        "projection, and tfidf_topk, integer-exact per-doc tf-idf",
-        "keywords whose document-frequency table joins back on term as",
-        "a shuffle join — a web-scale vocabulary is never broadcast),",
-        "and finally 55 (added: gopher_repetition, the full Gopher",
-        "repetition battery as per-document sorted-run folds — zero",
-        "Exchange, where the naive gram explode+groupBy would shuffle",
-        "~9x the tokenised corpus; decontaminate_fuzzy, MinHash-Jaccard",
-        "benchmark decontamination — the eval side's tiny band table",
-        "broadcasts, the corpus is never self-joined; and",
-        "canonical_dedup, keep-first dedup by the page's declared",
-        "rel=canonical target — min-aggregate keeper table, page",
-        "payloads never shuffle; vocab_coverage, the tokenizer-",
-        "vocabulary OOV audit — bounded top-V vocab broadcast to the",
-        "occurrence join, TakeOrderedAndProject for the global top-V;",
-        "minhash_accuracy, the signature-estimate-vs-exact-Jaccard",
-        "audit over LSH candidate pairs — the measurement that",
-        "justifies the 16-component sketch's keep/drop boundary; and",
-        "script_profile, the per-document Unicode-script composition",
-        "profile — map-only, zero Exchange), then 59 (added:",
-        "gopher_gate, the published Gopher Table-A1 thresholds applied",
-        "over the battery — one extra map-only projection, still zero",
-        "Exchange; semantic_dedup, SemDeDup embedding-space",
-        "dedup whose pairwise cosine runs only WITHIN quantizer cells —",
-        "the scale path that replaces embedding_near_dup's crossJoin;",
-        "bm25_topk, Okapi BM25 retrieval with integer-exact",
-        "bit-length idf and all-milli length normalization — map-side",
-        "term filtering before any shuffle, bounded broadcasts, heap",
-        "top-k; and split_assign, hash-based train/val/test dataset",
-        "splits — basis-point buckets of the portable hash, stable",
-        "under corpus growth, map-only zero Exchange), then 60 (added:",
-        "exact_substrings, the Lee et al. 2021 exact-substring dedup as",
-        "a positional-gram self-join plus diagonal gaps-and-islands",
-        "merge — near-unique grams are filtered by the n>=2 window",
-        "count whose exchange doubles as the join boundary), then 61",
-        "(added: dsir_weights, DSIR importance-resampling weights —",
-        "hashed-bigram bucket counts are bounded at n_buckets rows by",
-        "construction, so the log-ratio bits table broadcasts to the",
-        "score pass and corpus text never shuffles by bucket), then 62",
-        "(added: token_budget, exact greedy token-budget selection —",
-        "the global cumulative window the rule implies decomposes",
-        "through a bounded integer-score histogram, so only the one",
-        "straddling score bucket is ever windowed and the corpus is",
-        "never globally sorted), then 63 (added: shard_manifest,",
-        "content-addressed per-shard checksums via an XOR fold of",
-        "key-bound digests — order/partitioning-independent, one hash",
-        "aggregate, bounded output), then 64 (added: dup_gram_profile,",
-        "the per-document memorization-risk audit — fraction of each",
-        "doc's distinct 5-grams occurring in >= min_df documents; two",
-        "gram passes whose df join is gram-keyed, never a vocabulary",
-        "broadcast), then 65 (added: linear_classify, fastText-style",
-        "linear classifier inference over hashed bag-of-tokens — the",
-        "weight table is bounded at n_buckets rows so it broadcasts to",
-        "the one token pass; corpus text never shuffles by feature),",
-        "then 66 (added: domain_boilerplate, intra-domain chrome strip",
-        "— within-site DISTINCT-document line frequency, so per-domain",
-        "shuffles carry only (domain, line-key, doc_id) with map-side",
-        "partial distinct and the offender set stays AQE-joinable),",
-        "then 67 (added: bpe_pair_counts, the BPE merge-decision pair",
-        "count — the only corpus-sized pass is the map-combinable word",
-        "count; pair extraction runs over the bounded distinct-word",
-        "relation and the top-N is a TakeOrderedAndProject heap), then",
-        "70 (added: gram_novelty, the ingestion-order marginal-utility",
-        "audit — min-owner aggregate and owner join both gram-keyed;",
-        "bigram_surprisal, stupid-backoff bigram LM scoring in the",
-        "CCNet train/score shape — LM tables key-shuffled, never",
-        "broadcast; rank_correlation, integer-milli Spearman between",
-        "quality signals — midranks from bounded value histograms, no",
-        "corpus-wide window), then 72 (added: token_drift, the snapshot",
-        "total-variation drift monitor — one vocab-keyed full-outer",
-        "join, never broadcast, single-row totals fold in by broadcast;",
-        "filter_kappa, Cohen's kappa between two keep/drop gates —",
-        "map-only battery plus one global five-counter aggregate),",
-        "then 74 (added: lsh_tuning, the evidence-based (bands, rows)",
-        "S-curve planner — exact-pair measurement confined to the tuning",
-        "sample, the <=101-row centi-Jaccard histogram localCheckpointed",
-        "once so the five grid branches never recompute the pair join,",
-        "integer-exact decimal/HUGEINT multiply chains, warm ~4 s at",
-        "sf0.1 after the in-query input repartition (11.3 s without);",
-        "eval_contamination, the per-eval-document report a model card",
-        "publishes — bounded eval gram relation broadcast, corpus never",
-        "shuffled by gram, benchmark-bounded totals join broadcast,",
-        "warm ~1.5 s), then 75 (added: minhash_merge, incremental",
-        "sketch maintenance — elementwise-min signature fold, min",
-        "distributes over set union so batch sketches merge without",
-        "re-tokenizing history; ONE partial-combinable aggregate over",
-        "16-long rows, plan-pinned), then 77 (added:",
-        "dup_substring_removal, the REMOVAL step of Lee et al.",
-        "exact-substring dedup — every >=8-token shared run cut from",
-        "all but its smallest-id holder, overlaps interval-merged per",
-        "victim, case-preserving map-side rebuild; warm 11.2 s at",
-        "sf0.1, indistinguishable from the exact_substrings span side",
-        "it composes (11.2 s alone) — the removal itself is free;",
-        "shuffle_shards, the deterministic training-order shuffle —",
-        "portable-hash shard + rank + exact cumulative offsets, ONE",
-        "data shuffle with the shard-size aggregate riding it as a",
-        "ReusedExchange, warm 0.4 s), then 81 (added: bloom_ingest,",
-        "the incremental-ingest Bloom prefilter — the bounded bit set",
-        "broadcasts, history is never broadcast and only the",
-        "bloom-positive subset pays the confirm SortMergeJoin;",
-        "site_quality, the RefinedWeb per-host gate — one map-side-",
-        "combinable (sum, count) aggregate, no salting needed because",
-        "a mean is associative; encoding_audit, the mojibake/control/",
-        "U+FFFD triage — map-only, zero Exchange; and compaction_plan,",
-        "Iceberg-style binpack planning over the metadata-sized file",
-        "manifest — per-partition cumsum window, never a global sort),",
-        "then 82 (added: robots_gate, the RFC 9309 fetch-permission",
-        "gate — robots files are host-cardinality metadata, every",
-        "window is per-host or per-URL, the verdict join is",
-        "host-keyed), then 83 (added: pmi_collocations, word2vec-style",
-        "phrase induction by integer-milli PMI lift — two map-",
-        "combinable count aggregates, word-keyed unigram joins, heap",
-        "top-N), then 84 (added: skew_stats, the pre-salting key-skew",
-        "diagnostic — exact milli Gini over the bounded count-of-counts",
-        "histogram; the only corpus-sized pass is the key-count",
-        "aggregate being diagnosed), then 85 (added: robots_directives,",
-        "the crawl-delay/sitemap scheduling half of the robots contract",
-        "on the same shared parse), then 86 (added: lang_segments,",
-        "mixed-language doc segmentation — per-line marker language-ID",
-        "plus run-length merge, every window partitioned by doc_id over",
-        "one Exchange), then 87 (added: frontier_schedule, the composed",
-        "crawl leg — permission gate + crawl-delay directives + per-host",
-        "serialized fetch slots; the slot window carries only",
-        "(host, id)), then 88 (added: skew_top_keys, the actionable",
-        "hot-key listing beside skew_stats — same one key-count",
-        "aggregate, heap top-N). The suite is now 88 queries; the last",
-        "recorded suite run was at 86 queries, so frontier_schedule and",
-        "skew_top_keys have no recorded timings. That run measured the first",
-        "nine r5-final adds cheap at sf0.1: bloom_ingest 0.89 s,",
-        "site_quality 0.94 s, encoding_audit 0.29 s, compaction_plan",
-        "0.37 s, robots_gate 3.8 s (overhead-dominated at toy scale —",
-        "isolated warm reps 2.6-3.5 s, the url_dedup_hosts pattern),",
-        "pmi_collocations 1.35 s, skew_stats 0.90 s, robots_directives",
-        "1.04 s, lang_segments 1.26 s.",
-        "Total suite wall time GROWS by",
-        "construction each round; per-query timings are the comparable unit.",
-        "The r4 additions cost ~9 s of suite wall at sf0.1 (html_extract 5.7 s",
-        "— in line with its structural twin pdf_bytes_extract; link_domains",
-        "0.5 s; url_dedup_hosts 1.8 s, overhead-dominated at this tiny scale:",
-        "two short-key shuffles at 32 shuffle partitions over 6 k rows;",
-        "line_dedup ~1 s — key-only frequency shuffle + broadcast-joined",
-        "heavy-hitter set + one doc_id reassembly aggregate).",
-        "",
-        "## Round-to-round variance caveat",
-        "",
-        "The sandbox is a shared-host VM: identical code measured on",
-        "different days drifts ±20-30% on sub-second Catalyst queries",
-        "(observed r2 → r3 on queries whose plans did not change at all,",
-        "e.g. mode_quantity 0.90 s → 1.24 s). Cross-ROUND suite deltas on",
-        "individual queries are therefore only meaningful beyond that",
-        "band, or when confirmed by an isolated warm re-run on an idle",
-        "machine (e.g. pdf_bytes_extract's r2 drift was confirmed real at",
-        "5.2 s suite / reproduced isolated, then fixed to 3.8 s warm in",
-        "r3 by fast-pathing clean batches). Within-run comparisons (the",
-        "scaling table above, pinned cores, same minute) are unaffected.",
-        "",
-        "Drift verdicts recorded under this protocol:",
-        "",
-        "- ann_lsh_topk r3 suite reading 1.87 s (vs 1.49 s r2, nominal",
-        "  1.26x): KILLED in r4 by the mandated isolated warm re-run on an",
-        "  idle machine — 5 warm repetitions at sf0.1 gave",
-        "  [1.31, 1.289, 1.211, 1.243, 1.058] s, median 1.243 s, faster",
-        "  than either suite reading. Ambient noise, not a regression; the",
-        "  plan was unchanged and no fix was applied.",
-        "- curate_corpus r4 suite reading 12.5 s (vs 9.6 s r3, +30%, with",
-        "  the decontamination stage added in-round): SPLIT in r5 by the",
-        "  isolated protocol — 5 warm reps each at sf0.1, same session:",
-        "  r4-shape WITHOUT decontaminate median 12.30 s, WITH it 11.91 s.",
-        "  The decontamination stage's marginal cost is ZERO within the",
-        "  noise band (the broadcast eval-gram anti-join rides the already-",
-        "  shuffled quality survivors); the r4 +30% was ambient drift.",
-        "- the r5 default hot-band cap (max_bucket=256) in curate_corpus:",
-        "  a first groupBy-sizes + anti-join implementation measured ~2 s",
-        "  of guard overhead (13.96 s median vs 11.91 uncapped — the size",
-        "  aggregate's exchange carries partial rows, so the anti-join",
-        "  recomputed the corpus-sized minhash upstream). Rewritten as a",
-        "  WINDOW count over band_key (plan-pinned: no LeftAnti, no",
-        "  broadcast, one Generate explode with ReusedExchange), the",
-        "  capped pipeline measured FASTER than uncapped — 7.58 s vs",
-        "  9.80 s median, 5 interleaved warm reps. Root cause isolated:",
-        "  NOT the cap dropping work (sf0.1's densest band bucket holds 5",
-        "  docs — nothing is hot), but the exchange boundary the window",
-        "  introduces, which materializes the minhash upstream as ONE",
-        "  reusable shuffle stage; without it the band self-join's second",
-        "  side recomputes shingles+minhash for the whole corpus. The",
-        "  uncapped path now gets the same boundary via an explicit",
-        "  repartition(band_key) — minhash_lsh_pairs alone went",
-        "  5.84 s -> 3.28 s median (5 interleaved warm reps at sf0.1),",
-        "  and the join needed that partitioning anyway.",
-        "- dedup_cross_corpus r5 suite reading 5.97 s (vs 4.54 s r4,",
-        "  nominal 1.31x, code untouched): KILLED by the isolated protocol",
-        "  — 5 warm reps at sf0.1 gave median 4.362 s, at r4's level.",
-        "  Ambient suite-position noise, no fix applied.",
-        "- web_curate's r5 keep_unkeyed passthrough, first implemented as",
-        "  filter-and-union, re-ran the canonicalize regex chain over the",
-        "  corpus a second time (isolated A/B: 4.53 s vs 3.45 s for the",
-        "  old drop semantics). Rewritten single-pass — unkeyed rows ride",
-        "  the same window under per-row sentinel keys in a disjoint",
-        "  namespace — measured 2.75 s median, faster than even the",
-        "  drop-semantics version (the drop path's filter also paid a",
-        "  canonicalize evaluation the sentinel projection folds away).",
-        "- curate_corpus_full's cleaned corpus (line dedup -> PII scrub)",
-        "  feeds THREE downstream consumers (minhash shingles, the",
-        "  component universe, the keeper/quality chain) and was being",
-        "  recomputed by each — plain curate_corpus never hits this",
-        "  because its corpus is a cheap parquet filter. An executor-",
-        "  local checkpoint of the cleaned corpus pays the subtree once:",
-        "  15.1 -> 13.0 s median, 5 interleaved warm reps at sf0.1 (the",
-        "  in-session equivalent of writing the cleaned corpus to a lake",
-        "  table between stages, which is what a real 100 TB run does).",
-        "- pdf_bytes_extract r5-final suite reading 25.3 s (vs 4.8 s r4,",
-        "  nominal 5.2x, code untouched all round) from a suite launched",
-        "  right after a 28-min full-pytest run: KILLED by the isolated",
-        "  protocol on the settled machine — 5 warm reps at sf0.1 gave",
-        "  [5.646, 3.352, 3.138, 3.167, 3.454] s, median 3.352 s, at r4's",
-        "  warm level. html_extract's 8.75 s reading from the same",
-        "  contaminated suite re-read 6.644 s median ([7.619, 6.777,",
-        "  6.17, 6.644, 6.163]), inside its documented 4.7-8.8 s spread.",
-        "  Ambient suite-position noise in both cases, no fix applied;",
-        "  the 73-query r5 suite otherwise sits at a 0.951 median",
-        "  per-query ratio vs the r4 readings of the 35 common queries.",
-        "- the scaling pair itself is subject to the same ambient band:",
-        "  an r5-final --scaling run launched immediately after a 17-min",
-        "  full-pytest run read 2->8 = 0.75 (its 8-core leg 22.9 s vs the",
-        "  stable 17.9-18.6 s across every other measurement of the",
-        "  unchanged flagship); the rerun two minutes later on the",
-        "  settled machine read 0.981 with all legs back at historical",
-        "  values. The pinned pair must run on a settled machine — the",
-        "  contaminated reading is retained here rather than silently",
-        "  discarded. The table above is the most recent settled run on",
-        "  the shipped code (the r5-final settled readings were 0.95,",
-        "  0.972 and 0.981 — all well inside the band and above the 0.8",
-        "  criterion).",
-        "",
-        "## Iceberg commit overhead — not measurable in this sandbox",
-        "",
-        "The lake's `table_format=\"iceberg\"` branch issues the real",
-        "`writeTo(tbl).overwritePartitions()` / `.append()` verbs, but the",
-        "environment ships NO iceberg-spark runtime jars (checked:",
-        "`pyspark/jars` has none and installs are not permitted), so",
-        "snapshot-commit overhead vs the parquet lake cannot be timed here.",
-        "The dispatch seam is exercised both ways by a fake-catalog writer",
-        "in tests/test_lineage.py::test_iceberg_dispatch_seam; on a real",
-        "cluster, point `Lake(root=\"catalog.db\", table_format=\"iceberg\")`",
-        "at an Iceberg catalog and `python bench.py --durability` measures",
-        "the same pipeline through snapshot commits.",
-        "",
-    ]
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH.md"), "w") as f:
-        f.write("\n".join(lines))
-
-
-def run_durability(n_docs: int = 64000, cpus: str = "32") -> dict:
-    """End-to-end durability measurement: full lineage pipeline over a
-    bucket-partitioned input vs the same input unpartitioned (pruning
-    cost visibility). Writes BENCH_DURABILITY.json for write_bench_md."""
-    import shutil
-    import tempfile
-
-    from pdf_extract_spark.lineage import Lake, bucket_of, run_extraction_with_lineage
-    from pdf_extract_spark.session import build_spark
-    from pyspark.sql import functions as F
-
-    os.environ["SPARK_GRAFT_CPUS"] = cpus
-    spark = build_spark(app_name="bench_durability")
-    n_buckets, group_size = 32, 8
-
-    work = tempfile.mkdtemp(prefix="bench_dur_")
-    try:
-        docs = _synth_docs(spark, n_docs, int(cpus) * 4).withColumn(
-            "bucket", bucket_of(F.col("doc_id"), n_buckets)
-        )
-        docs.write.partitionBy("bucket").parquet(f"{work}/docs_bucketed")
-        # derive the flat copy from the already-materialized parquet so
-        # the expensive generator runs once, not twice
-        (
-            spark.read.parquet(f"{work}/docs_bucketed").drop("bucket")
-            .write.parquet(f"{work}/docs_flat")
-        )
-
-        out = {}
-        # plan-level proof that the per-group filter PRUNES bucket
-        # partitions of the ingested table (wall-clock is the wrong
-        # instrument locally: the 64k-doc input is ~60 MB and page-cached,
-        # so full scans are free here — pruning pays at petabyte inputs)
-        bucketed = spark.read.parquet(f"{work}/docs_bucketed")
-        plan = (
-            bucketed.filter(F.col("bucket").isin([0, 1]))
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        pruned = "PartitionFilters: [" in plan and "bucket" in plan.split(
-            "PartitionFilters: ["
-        )[1].split("]")[0]
-        for label, path in (("partitioned", f"{work}/docs_bucketed"),
-                            ("unpartitioned", f"{work}/docs_flat")):
-            lake = Lake(spark, f"{work}/lake_{label}")
-            inp = spark.read.parquet(path)
-            t0 = time.perf_counter()
-            run_extraction_with_lineage(
-                lake, inp, run_id=f"dur_{label}",
-                n_buckets=n_buckets, group_size=group_size,
-            )
-            out[f"{label}_sec"] = round(time.perf_counter() - t0, 1)
-            if label == "partitioned":
-                stats = spark.read.parquet(lake.spans_out)
-                out["n_spans"] = int(
-                    stats.select(F.sum(F.size("spans"))).first()[0]
-                )
-                assert stats.count() == n_docs
-        result = {
-            "n_docs": n_docs,
-            "n_buckets": n_buckets,
-            "n_groups": (n_buckets + group_size - 1) // group_size,
-            "cpus": int(cpus),
-            "docs_per_sec": round(n_docs / out["partitioned_sec"], 1),
-            "partitioned_sec": out["partitioned_sec"],
-            "unpartitioned_sec": out["unpartitioned_sec"],
-            "partition_filters_pushed": bool(pruned),
-            "n_spans": out["n_spans"],
-        }
-        with open(os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_DURABILITY.json"
-        ), "w") as f:
-            json.dump(result, f)
-        return result
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR))
     ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    ap.add_argument("--scaling", action="store_true", help="run the N->4N scaling evidence job")
-    ap.add_argument("--durability", action="store_true",
-                    help="run the 64k-doc end-to-end lineage durability measurement")
-    ap.add_argument("--flagship-once", action="store_true", help=argparse.SUPPRESS)
-    ap.add_argument("--mult", type=int, default=24, help="input scale (x1000 docs) for --scaling")
-    ap.add_argument(
-        "--levels", default="2,8,32",
-        help="comma-separated pinned-core levels for --scaling",
-    )
     args = ap.parse_args()
-
-    if args.flagship_once:
-        print(json.dumps(run_flagship_once(args.sf_dir, args.cpus, args.mult)))
-        return
-    if args.durability:
-        dur = run_durability(cpus=args.cpus)
-        # fold the new durability artifact into BENCH.md, reusing the
-        # last scaling result embedded in its Raw: line
-        bench_md = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH.md")
-        if os.path.exists(bench_md):
-            import re as _re
-
-            m = _re.search(r"Raw: `(\{.*?\})`", open(bench_md).read())
-            if m:
-                write_bench_md(json.loads(m.group(1)))
-        print(json.dumps(dur))
-        return
-    if args.scaling:
-        levels = [int(x) for x in args.levels.split(",")]
-        result = run_scaling(args.sf_dir, levels, args.mult)
-        # measured AFTER the pinned runs so nothing shares the machine
-        # with them; serialized into the Raw: line so the --durability
-        # rewrite path keeps the measured values
-        result["recalls"] = measure_recalls(args.sf_dir)
-        write_bench_md(result)
-        print(json.dumps(result))
-        return
     print(json.dumps(run_suite(args.sf_dir, args.cpus)))
 
 

@@ -594,9 +594,9 @@ def _ivf_probe_rank(
 
 
 # --------------------------------------------------------------------------
-# recall instrumentation (shared by tests/test_similarity_ann.py and
-# bench.py's BENCH.md generation — ADVICE r3: recall figures must be
-# MEASURED at report time, never embedded as literals)
+# recall instrumentation (measured by tests/test_similarity_ann.py —
+# ADVICE r3: recall figures must be MEASURED at report time, never
+# embedded as literals)
 # --------------------------------------------------------------------------
 
 def _recall_by_query(rows) -> dict:
@@ -609,8 +609,8 @@ def _recall_by_query(rows) -> dict:
 def _recall_vs_exact(emb, variants: dict, n_queries: int, k: int) -> dict[str, float]:
     """The single home of the recall@k definition (exact cosine_topk as
     ground truth, hits-over-truth-size, round 4): both the flat-sf and
-    planted-cluster reports go through here so tie handling or rounding
-    can never diverge between BENCH.md tables."""
+    planted-cluster measurements go through here so tie handling or
+    rounding can never diverge between them."""
     truth = _recall_by_query(cosine_topk(emb, n_queries=n_queries, k=k).collect())
     total = max(sum(len(truth[q]) for q in truth), 1)
     out = {}

@@ -634,10 +634,12 @@ def extract_columns(kinds: list, texts: list, media_refs: list,
 
 def _span_columns(spans: list) -> tuple[list, list, list, list]:
     # NULL span elements (legal: SPANS is an array with containsNull)
-    # yield no fragment and count toward no boilerplate key
+    # yield no fragment and count toward no boilerplate key; a NULL
+    # offset sorts as 0, as in the kernel's columns (extract._columns)
     live = [s for s in spans if s is not None]
     return ([s["kind"] for s in live], [s["text"] for s in live],
-            [s["media_ref"] for s in live], [s["offset"] for s in live])
+            [s["media_ref"] for s in live],
+            [0 if s["offset"] is None else s["offset"] for s in live])
 
 
 def _frag_columns(frags: list[dict]) -> tuple[list, list, list]:

@@ -110,11 +110,15 @@ def test_kill_and_resume_no_reextraction(spark, docs_df, tmp_path):
     assert out.select("doc_id").distinct().count() == N_DOCS
 
 
-def test_prebucketed_input_path(spark, docs_df, tmp_path):
+def test_prebucketed_input_path(spark, docs_df, tmp_path, monkeypatch):
     """Bucket-partitioned ingest: a correct pre-existing bucket column is
-    reused (pruning path) and yields the identical golden corpus; a
-    mismatched bucket count fails loudly instead of silently dropping
-    data under dynamic partition overwrite."""
+    reused (pruning path): each group's commit plan scans only its own
+    bucket partitions (a bucket ``PartitionFilters`` entry, so group IO
+    is O(group), not O(corpus)), and the run yields the identical golden
+    corpus; a mismatched bucket count fails loudly instead of silently
+    dropping data under dynamic partition overwrite."""
+    import re
+
     from pyspark.sql import functions as F
 
     from pdf_extract_spark.lineage import bucket_of
@@ -124,12 +128,26 @@ def test_prebucketed_input_path(spark, docs_df, tmp_path):
         .write.partitionBy("bucket").parquet(src)
     bucketed = spark.read.parquet(src)
 
+    plans = []
+    commit = Lake.commit_spans
+
+    def recording_commit(self, out):
+        plans.append(out._jdf.queryExecution().executedPlan().toString())
+        commit(self, out)
+
+    monkeypatch.setattr(Lake, "commit_spans", recording_commit)
     lake = Lake(spark, str(tmp_path / "lake"))
     run_extraction_with_lineage(
         lake, bucketed, run_id="r1", n_buckets=N_BUCKETS, group_size=GROUP
     )
     golden = oracle.expected_corpus(generator.make_corpus(N_DOCS, seed=9))
     assert _collect_spans(lake.read_spans_out()) == golden
+
+    pruned = [re.findall(r"PartitionFilters: \[[^\]]*bucket#\d+ IN \(([\d, ]+)\)", p)
+              for p in plans]
+    groups = [[int(b) for b in m[0].split(",")] for m in pruned if len(m) == 1]
+    assert len(groups) == len(plans), plans
+    assert sorted(groups) == [list(range(g, g + GROUP)) for g in range(0, N_BUCKETS, GROUP)]
 
     # wrong bucket count -> validation failure, nothing written
     lake2 = Lake(spark, str(tmp_path / "lake2"))

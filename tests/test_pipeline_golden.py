@@ -180,3 +180,18 @@ def test_invalid_utf8_span_text_is_repaired_not_fatal(spark):
                              for s in bad["spans"]])
     assert got == oracle.expected_corpus(docs[:-1] + [fixed])
     assert "\ufffd" in "".join(t for _, t, _, _ in got["d_bad_utf8"])
+
+
+def test_lone_surrogate_span_text_is_stored_as_one_replacement(spark):
+    """A lone surrogate cannot be encoded as UTF-8: createDataFrame stores
+    exactly one U+FFFD in its place. Extraction then succeeds, and its
+    output equals the oracle over the stored text."""
+    doc = {"doc_id": "d_surrogate", "spans": [
+        {"kind": "text", "text": "Lone \ud800 surrogate.", "media_ref": "", "offset": 0},
+    ]}
+    df = spark.createDataFrame([doc], schema=DOCUMENTS)
+    stored = df.collect()[0]["spans"][0]["text"]
+    assert stored == "Lone \ufffd surrogate."
+    got = _collect_spans(run_extraction(df, num_partitions=1))
+    assert got == oracle.expected_corpus([dict(doc, spans=[dict(doc["spans"][0], text=stored)])])
+    assert got["d_surrogate"] == [("P", "Lone \ufffd surrogate.", "", 0)]

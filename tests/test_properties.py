@@ -161,9 +161,10 @@ def test_extract_batch_matches_rules_for_arbitrary_kinds():
     oracle for UNEXPECTED kind values too (rules sends only
     kind=='media' down the media branch — any other kind takes the text
     path, and only kind=='text' counts toward boilerplate keys), for NULL
-    lists, NULL elements, NULL text and media_ref, empty lists, for a
-    sliced batch whose list offsets do not start at 0, and for the
-    all-nullable struct type a parquet-read input arrives with."""
+    lists, NULL elements, NULL kind, text, media_ref and offset (a NULL
+    offset sorts as 0 in both twins), empty lists, for a sliced batch
+    whose list offsets do not start at 0, and for the all-nullable struct
+    type a parquet-read input arrives with."""
     import pyarrow as pa
     from hypothesis import given, settings
     from hypothesis import strategies as st
@@ -172,14 +173,14 @@ def test_extract_batch_matches_rules_for_arbitrary_kinds():
     from pdf_extract_spark.operators.extract import SPANS_ARROW, extract_spans
 
     span_st = st.one_of(st.none(), st.fixed_dictionaries({
-        "kind": st.sampled_from(["text", "media", "image", "table", "x", ""]),
+        "kind": st.sampled_from(["text", "media", "image", "table", "x", "", None]),
         # alphabet reaches every tag branch: digits + dots (H1/H2
         # numbering), colon (H3), uppercase (ALLCAPS), terminals,
         # bullets/stars/ws (cleanup chain)
         "text": st.one_of(st.none(), st.text(
             alphabet=st.sampled_from(list("aB1. :?!*-\t")), max_size=14)),
         "media_ref": st.sampled_from(["", "m:1", None]),
-        "offset": st.integers(0, 5),
+        "offset": st.one_of(st.none(), st.integers(0, 5)),
     }))
     doc_st = st.one_of(st.none(), st.lists(span_st, max_size=8))
 

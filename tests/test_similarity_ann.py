@@ -163,7 +163,7 @@ def test_minhash_hot_bucket_cap_and_plan(spark):
 def ann_recall_at_k(spark, sf_dir, n_queries=50, k=10):
     """recall@k of each ANN variant vs cosine_topk ground truth — the
     accuracy side of the accuracy/cost trade. Lives in similarity.py so
-    bench.py measures the same numbers it writes into BENCH.md."""
+    the flat and clustered measurements share one recall definition."""
     return S.measure_ann_recall(spark, sf_dir, n_queries=n_queries, k=k)
 
 
@@ -290,8 +290,8 @@ def test_pack_documents_greedy_semantics(spark):
 def test_trained_ivf_wins_on_clustered_corpus(spark):
     """On the planted-cluster corpus with a degenerate seeding prefix
     (similarity.make_clustered_embeddings), Lloyd training must
-    decisively beat the untrained seed quantizer — the evidence behind
-    BENCH.md's 'training pays on clustered corpora' claim (the sf
+    decisively beat the untrained seed quantizer — the evidence that
+    training pays on clustered corpora (frozen in BENCH.md; the sf
     embeddings show the opposite regime: weak clusters, where untrained
     seeds are competitive).
 

@@ -160,18 +160,23 @@ def test_pyfiles_zip_cache_keys_on_content_and_dest(tmp_path):
     packaging._ZIP_CACHE.clear()
 
 
-def test_bench_scaling_guards():
-    """--scaling refuses a single level BEFORE any expensive subprocess
-    run, and build_pdf refuses unknown variants instead of silently
-    serializing classic."""
-    sys.path.insert(0, REPO)
-    import bench
+def test_build_pdf_rejects_unknown_variant():
+    """build_pdf refuses unknown variants instead of silently serializing
+    classic."""
     import pytest
-
-    with pytest.raises(ValueError, match="at least two"):
-        bench.run_scaling("/root/testdata/sf0.001", [32], mult=1)
 
     from pdf_extract_spark.sources import pdfgen
 
     with pytest.raises(ValueError, match="unknown pdf variant"):
         pdfgen.build_pdf(0, variant="obstm")
+
+
+def test_bench_headline_names_catalogue_queries():
+    """bench.py times every HEADLINE name through QUERIES; a catalogue
+    rename must fail here, not in the one-JSON-line suite run."""
+    sys.path.insert(0, REPO)
+    import bench
+
+    from pdf_extract_spark.queries import QUERIES
+
+    assert set(bench.HEADLINE) <= set(QUERIES)
