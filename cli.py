@@ -6,7 +6,8 @@
   extract   one parquet documents table (input-hint shape) -> spans_out
             with bucket-granular lineage (resume = rerun same lake+input)
   folder    a directory of *.pdf (or --format html: *.html) files ->
-            spans_out (byte paths)
+            one ledger row per file, (doc_id, spans, parse_error): spans
+            for a healthy file, the quarantine reason for a bad one
   stream    incremental availableNow pass over an arriving documents dir
   curate    documents parquet -> curated packed corpus (line dedup, PII
             scrub, capped near-dedup, quality gate, optional eval-set
@@ -64,7 +65,9 @@ def main() -> None:
     p.add_argument("--buckets", type=int, default=64)
     p.add_argument("--group-size", type=int, default=8)
 
-    p = sub.add_parser("folder", help="directory of *.pdf/*.html -> spans_out parquet")
+    p = sub.add_parser(
+        "folder", help="directory of *.pdf/*.html -> ledgered spans parquet"
+    )
     p.add_argument("--input", required=True)
     p.add_argument("--output", required=True)
     p.add_argument("--format", choices=("pdf", "html"), default="pdf")
@@ -136,15 +139,24 @@ def main() -> None:
             f"({format_duration(time.time() - t0)})"
         )
     elif args.cmd == "folder":
-        from pdf_extract_spark.sources.folder import (
-            extract_html_folder,
-            extract_pdf_folder,
-        )
+        from pyspark.sql import functions as F
 
-        run = extract_pdf_folder if args.format == "pdf" else extract_html_folder
-        out = run(spark, args.input)
-        out.write.mode("overwrite").parquet(args.output)
-        print(f"extracted {spark.read.parquet(args.output).count()} documents -> {args.output}")
+        from pdf_extract_spark.operators.html import html_to_spans_full
+        from pdf_extract_spark.operators.layout import pdf_to_spans_full
+        from pdf_extract_spark.sources.folder import scan_html_folder, scan_pdf_folder
+
+        scan, full = (
+            (scan_pdf_folder, pdf_to_spans_full) if args.format == "pdf"
+            else (scan_html_folder, html_to_spans_full)
+        )
+        full(scan(spark, args.input)).write.mode("overwrite").parquet(args.output)
+        c = spark.read.parquet(args.output).agg(
+            F.count("*").alias("files"), F.count("parse_error").alias("quarantined")
+        ).first()
+        print(
+            f"{c.files - c.quarantined} extracted, {c.quarantined} quarantined "
+            f"of {c.files} files -> {args.output}"
+        )
     elif args.cmd == "stream":
         from pdf_extract_spark.streaming import incremental_extraction
 

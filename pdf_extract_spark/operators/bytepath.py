@@ -8,12 +8,11 @@ its parser and its extraction UDF. Everything here exists once:
 
   * ``quarantining_udf`` — the Arrow parse stage that turns a corrupt
     payload into a ``parse_error`` row instead of a task failure;
-  * ``bytes_to_spans_full`` — the one-pass plan (ONE Exchange, the
-    mandated repartitionByRange, then two back-to-back Arrow stages)
-    whose output ``(doc_id, spans, parse_error)`` is the ledger: every
-    input row comes out exactly once, gate-rejected rows included;
-  * ``healthy_spans`` / ``parse_error_rows`` / ``split`` — the two views
-    over one full frame.
+  * ``bytes_to_spans_full`` — the one-pass plan (ONE scan, ONE
+    Exchange, the mandated repartitionByRange, then two back-to-back
+    Arrow stages) whose output ``(doc_id, spans, parse_error)`` is the
+    ledger: every input row comes out exactly once, gate-rejected rows
+    included.
 """
 
 from __future__ import annotations
@@ -23,7 +22,6 @@ from pyspark.sql import DataFrame, functions as F, types as T
 from pyspark.sql.pandas.functions import pandas_udf
 
 from pdf_extract_spark.pipeline import partition_for_extraction
-from pdf_extract_spark.schemas import SPANS
 
 
 def quarantining_udf(name: str, field: str, field_type: T.DataType, load):
@@ -97,36 +95,21 @@ def bytes_to_spans_full(
     """validate -> salt + repartitionByRange -> quarantining parse ->
     extraction. Returns (doc_id, spans, parse_error): healthy docs carry
     spans; parser-quarantined and gate-rejected docs carry the error
-    string and NULL spans, so spans rows + error rows == input rows.
-    ``extract_udf`` must map NULL -> NULL (quarantined rows pass
-    through). This is the surface to SINK at scale — one table, one
-    parse; persist or write it once when you consume both views."""
-    rejected = df.filter(~gate).select(
+    string and NULL spans, one row per input row.
+
+    The gate is a column, not a second scan: a rejected row rides the
+    one Exchange and both Arrow stages as a NULL payload, which the
+    parse stage quarantines and ``extract_udf`` must map to NULL; its
+    gate reason then overrides the parser's "null content"."""
+    gated = df.select(
         "doc_id",
-        F.lit(None).cast(SPANS).alias("spans"),
-        F.lit(f"failed validation gate: {reject_reason}").alias("parse_error"),
+        F.when(gate, F.col("content")).alias("content"),
+        F.when(~gate, F.lit(f"failed validation gate: {reject_reason}")).alias("gate_error"),
     )
-    parted = partition_for_extraction(df.filter(gate))
-    parsed = parse_payloads(parted, parse_udf, field)
+    parted = partition_for_extraction(gated)
+    parsed = parted.select("doc_id", "gate_error", parse_udf(F.col("content")).alias("p"))
     return parsed.select(
-        "doc_id", extract_udf(F.col(field)).alias("spans"), "parse_error"
-    ).unionByName(rejected)
-
-
-def healthy_spans(full: DataFrame) -> DataFrame:
-    """(doc_id, spans) rows of a full frame."""
-    return full.filter(F.col("parse_error").isNull()).select("doc_id", "spans")
-
-
-def parse_error_rows(full: DataFrame) -> DataFrame:
-    """(doc_id, parse_error) rows of a full frame — the quarantine ledger."""
-    return full.filter(F.col("parse_error").isNotNull()).select("doc_id", "parse_error")
-
-
-def split(full: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Both consumers from ONE parse: (healthy_spans, parse_error_rows)
-    over a localCheckpointed full frame, so a pipeline writing spans AND
-    the ledger does not pay the Python parse twice (separate actions on
-    lazy views rebuild the plan)."""
-    full = full.localCheckpoint()
-    return healthy_spans(full), parse_error_rows(full)
+        "doc_id",
+        extract_udf(F.col(f"p.{field}")).alias("spans"),
+        F.coalesce(F.col("gate_error"), F.col("p.parse_error")).alias("parse_error"),
+    )

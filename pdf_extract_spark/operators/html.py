@@ -81,12 +81,6 @@ def html_to_spans_full(df: DataFrame) -> DataFrame:
     )
 
 
-def html_to_spans(df: DataFrame) -> DataFrame:
-    """Healthy pages only: (doc_id, spans) fully extracted. To consume
-    the ledger too, build html_to_spans_full once and use bytepath.split."""
-    return bytepath.healthy_spans(html_to_spans_full(df))
-
-
 # --------------------------------------------------------------------------
 # link harvest — the corpus-wide web-graph pass (domain caps, blocklists,
 # URL dedup all start from this table)
@@ -105,7 +99,7 @@ def harvest_links(pages: DataFrame, html_col: str = "html") -> DataFrame:
     real crawl HTML mixes them). Pure JVM regex (whole-stage codegen, no
     Python): the cheap pass a curation pipeline runs over EVERY page for
     the link graph, where regex recall over well-formed attributes is the
-    right cost/recall trade — the DOM path (html_to_spans) remains the
+    right cost/recall trade — the DOM path (html_to_spans_full) remains the
     semantics-complete extractor for unquoted/soup markup."""
     h = F.col(html_col)
     urls = F.concat(

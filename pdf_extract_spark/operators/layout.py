@@ -95,8 +95,3 @@ def pdf_to_spans_full(df: DataFrame) -> DataFrame:
         parse_pdf_safe_udf, "pages", layout_spans_udf,
     )
 
-
-def pdf_to_spans(df: DataFrame) -> DataFrame:
-    """Healthy documents only: (doc_id, spans). To consume the ledger
-    too, build pdf_to_spans_full once and use bytepath.split."""
-    return bytepath.healthy_spans(pdf_to_spans_full(df))

@@ -593,103 +593,6 @@ def _ivf_probe_rank(
     return _rank_topk(q, data, "cell", k, dedup=True)
 
 
-# --------------------------------------------------------------------------
-# recall instrumentation (measured by tests/test_similarity_ann.py —
-# ADVICE r3: recall figures must be MEASURED at report time, never
-# embedded as literals)
-# --------------------------------------------------------------------------
-
-def _recall_by_query(rows) -> dict:
-    d: dict = {}
-    for r in rows:
-        d.setdefault(r["q_id"], set()).add(r["cand_id"])
-    return d
-
-
-def _recall_vs_exact(emb, variants: dict, n_queries: int, k: int) -> dict[str, float]:
-    """The single home of the recall@k definition (exact cosine_topk as
-    ground truth, hits-over-truth-size, round 4): both the flat-sf and
-    planted-cluster measurements go through here so tie handling or
-    rounding can never diverge between them."""
-    truth = _recall_by_query(cosine_topk(emb, n_queries=n_queries, k=k).collect())
-    total = max(sum(len(truth[q]) for q in truth), 1)
-    out = {}
-    for name, df in variants.items():
-        got = _recall_by_query(df.collect())
-        hits = sum(len(got.get(q, set()) & truth[q]) for q in truth)
-        out[name] = round(hits / total, 4)
-    return out
-
-
-def measure_ann_recall(spark, sf_dir: str, n_queries: int = 50, k: int = 10,
-                       dim: int = 64) -> dict[str, float]:
-    """recall@k of every ANN variant vs cosine_topk ground truth on the
-    sf_dir embeddings — the accuracy side of the accuracy/cost trade.
-    n_queries defaults to 50 (VERDICT r4 item 5): at 5 queries a single
-    unlucky query moves recall@10 by 0.2, too thin for the design claims
-    BENCH.md rests on; 50 queries x k=10 = 500 candidate slots keeps the
-    table load-bearing and still runs in seconds at sf0.1."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    variants = {
-        "lsh": ann_lsh_topk(emb, n_queries=n_queries, k=k, dim=dim),
-        "multiprobe": ann_lsh_multiprobe_topk(emb, n_queries=n_queries, k=k, dim=dim),
-        "multitable": ann_lsh_multitable_topk(emb, n_queries=n_queries, k=k, dim=dim),
-        "ivf_fixed": ann_ivf_fixed_topk(emb, n_queries=n_queries, k=k),
-        "ivf": ann_ivf_topk(emb, n_queries=n_queries, k=k),
-    }
-    return _recall_vs_exact(emb, variants, n_queries=n_queries, k=k)
-
-
-def make_clustered_embeddings(spark, n: int = 400, k_clusters: int = 8,
-                              dim: int = 64, sigma: float = 0.35,
-                              seed: int = 113):
-    """A GENUINELY clustered embedding corpus (k Gaussian clusters on
-    well-separated centers) with a deliberately degenerate seeding
-    prefix: the 8 lowest vec_ids — exactly the rows ivf_seed_centroids
-    picks — are near-duplicates inside ONE cluster (the shape of a
-    corpus whose ingest order groups similar documents). The untrained
-    quantizer's cells are then near-random hyperplane slices through
-    every other cluster, while Lloyd training walks the centroids out to
-    the true clusters — the regime where training pays, complementing
-    the weakly-clustered sf embeddings where it doesn't."""
-    import numpy as np
-
-    rng = np.random.default_rng(seed)
-    centers = rng.normal(size=(k_clusters, dim))
-    centers = 4.0 * centers / np.linalg.norm(centers, axis=1, keepdims=True)
-    labels = rng.integers(0, k_clusters, size=n)
-    pts = centers[labels] + sigma * rng.normal(size=(n, dim))
-    for i in range(8):
-        pts[i] = centers[0] + 0.05 * rng.normal(size=dim)
-        labels[i] = 0
-    rows = [(int(i), [float(x) for x in pts[i]], int(labels[i])) for i in range(n)]
-    return spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    )
-
-
-def measure_clustered_ivf_recall(spark, n_queries: int = 50,
-                                 k: int = 10) -> dict[str, float]:
-    """recall@k of trained vs untrained IVF on the planted-cluster
-    corpus — the evidence behind BENCH.md's 'training wins on clustered
-    corpora' claim. At n_queries=50 the query set spans every planted
-    cluster (not just the degenerate near-dup seeding prefix the first
-    5 ids are), so the gap is the honest cross-cluster one: trained
-    ~0.96 vs untrained ~0.71, rather than the prefix-only 0.82 vs
-    0.18."""
-    emb = make_clustered_embeddings(spark)
-    emb = emb.cache()
-    emb.count()
-    try:
-        variants = {
-            "ivf": ann_ivf_topk(emb, n_queries=n_queries, k=k),
-            "ivf_fixed": ann_ivf_fixed_topk(emb, n_queries=n_queries, k=k),
-        }
-        return _recall_vs_exact(emb, variants, n_queries=n_queries, k=k)
-    finally:
-        emb.unpersist()
-
-
 def ann_lsh_topk_sql(table: str = "embeddings", n_queries: int = 5, k: int = 5) -> str:
     bkey = lsh_bucket_key_sql("embedding")
     cos = cosine_sql("q.q_vec", "c.c_vec")

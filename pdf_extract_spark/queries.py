@@ -2755,7 +2755,7 @@ def pdf_bytes_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         for d in range(40)
     ]
     df = spark.createDataFrame(rows, schema="doc_id string, content binary")
-    out = L.pdf_to_spans(df)
+    out = L.pdf_to_spans_full(df)
     return (
         out.select("doc_id", F.explode("spans").alias("s"))
         .select(
@@ -4249,7 +4249,7 @@ def html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         for d in range(40)
     ]
     df = spark.createDataFrame(rows, schema="doc_id string, content binary")
-    out = H.html_to_spans(df)
+    out = H.html_to_spans_full(df)
     return (
         out.select("doc_id", F.explode("spans").alias("s"))
         .select(

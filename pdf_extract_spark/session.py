@@ -26,9 +26,11 @@ def build_spark(
 
     Parameters are env-overridable so the bench harness can run the
     identical job at two parallelism levels (``SPARK_GRAFT_CPUS``) to
-    evidence the N -> 4N scaling criterion (BASELINE.md).
+    evidence the N -> 4N scaling criterion (BASELINE.md). Without
+    either override the master is ``local[<cores this process may
+    use>]``, what ``nproc`` prints.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
         # one shuffle partition per core locally; on a real cluster this

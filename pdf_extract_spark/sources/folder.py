@@ -3,8 +3,8 @@
 The reference iterates ``folder.glob("*.pdf")`` sequentially
 (/root/reference/main.py:1729-1893); the Spark-native form is the
 ``binaryFile`` datasource — a distributed, splittable-by-file scan with
-pushed path filters — followed by the %PDF- magic filter (S2) and the
-byte-path extraction."""
+pushed path filters — whose rows feed the byte path
+(operators/bytepath: the S2 gate, the parse and the extraction)."""
 
 from __future__ import annotations
 
@@ -30,21 +30,8 @@ def _scan_folder(spark: SparkSession, folder: str, ext: str):
     return raw.select(stem.alias("doc_id"), F.col("content"))
 
 
-def extract_pdf_folder(spark: SparkSession, folder: str) -> DataFrame:
-    """Folder -> validated -> parsed -> composed spans (the cli entry)."""
-    from pdf_extract_spark.operators.layout import pdf_to_spans
-
-    return pdf_to_spans(scan_pdf_folder(spark, folder))
-
-
 def scan_html_folder(spark: SparkSession, folder: str) -> DataFrame:
     """(doc_id, content) for every *.html under ``folder`` (same
     binaryFile scan as the PDF side, pushed path filter)."""
     return _scan_folder(spark, folder, "html")
 
-
-def extract_html_folder(spark: SparkSession, folder: str) -> DataFrame:
-    """Folder of pages -> markup gate -> DOM strip -> composed spans."""
-    from pdf_extract_spark.operators.html import html_to_spans
-
-    return html_to_spans(scan_html_folder(spark, folder))

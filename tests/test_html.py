@@ -11,7 +11,7 @@ import random
 import pytest
 
 from pdf_extract_spark import generator, oracle
-from pdf_extract_spark.operators import bytepath, html as H
+from pdf_extract_spark.operators import html as H
 from pdf_extract_spark.sources import htmlgen, htmlparse
 
 N_DOCS = 40
@@ -132,21 +132,20 @@ def test_spark_html_to_spans_matches_oracle(spark):
     rows.append({"doc_id": "junk_null", "content": None})
     df = spark.createDataFrame(rows, schema="doc_id string, content binary")
 
+    full = H.html_to_spans_full(df).collect()
     got = {
         r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"])
                       for s in r["spans"]]
-        for r in H.html_to_spans(df).collect()
+        for r in full if r["parse_error"] is None
     }
     docs = [generator.make_document(d, seed=SEED) for d in range(N_DOCS)]
     assert got == oracle.expected_corpus(docs)
 
-    full = H.html_to_spans_full(df)
-    errs = {r["doc_id"]: r["parse_error"]
-            for r in bytepath.parse_error_rows(full).collect()}
+    errs = {r["doc_id"]: r["parse_error"] for r in full if r["parse_error"] is not None}
     # ALL junk rows reconcile in the ledger: the parser-quarantined one
     # with its parse error, the gate-rejected ones with the gate reason
     assert set(errs) == {"junk_bare_lt", "junk_nomarkup", "junk_empty", "junk_null"}
-    assert len(got) + len(errs) == len(rows) == full.count()
+    assert len(got) + len(errs) == len(rows) == len(full)
     assert "no markup" in errs["junk_bare_lt"]
     assert "validation gate" in errs["junk_nomarkup"]
     assert "validation gate" in errs["junk_empty"]
@@ -184,10 +183,10 @@ def test_corrupt_batch_reuses_parsed_prefix(spark, monkeypatch):
 
 def test_extract_html_folder_end_to_end(spark, tmp_path):
     """The S1-style binaryFile scan over a directory of *.html pages:
-    glob filter skips non-pages, the markup gate drops markup-free
+    glob filter skips non-pages, the markup gate quarantines markup-free
     files, healthy pages extract to the golden spans (the HTML analog
     of test_sources_sinks.test_extract_pdf_folder_end_to_end)."""
-    from pdf_extract_spark.sources.folder import extract_html_folder
+    from pdf_extract_spark.sources.folder import scan_html_folder
 
     d = tmp_path / "pages"
     d.mkdir()
@@ -198,12 +197,14 @@ def test_extract_html_folder_end_to_end(spark, tmp_path):
     (d / "notes.txt").write_text("ignored")            # glob filter must skip
     (d / "empty.html").write_bytes(b"no tags here")    # markup gate must drop
 
+    full = H.html_to_spans_full(scan_html_folder(spark, str(d))).collect()
     got = {
         r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"])
                       for s in r["spans"]]
-        for r in extract_html_folder(spark, str(d)).collect()
+        for r in full if r["parse_error"] is None
     }
     assert "empty" not in got and "notes" not in got
+    assert {r["doc_id"] for r in full if r["parse_error"] is not None} == {"empty"}
     docs = []
     for i in range(n):
         doc = generator.make_document(i, seed=SEED)
@@ -373,31 +374,46 @@ def test_bare_text_never_duplicates_block_content():
         "Alpha beta gamma", "item divtext", "nested"]
 
 
-def test_html_split_parses_once_for_both_consumers(spark):
-    """bytepath.split over html_to_spans_full returns the healthy and
-    quarantine sides of ONE materialized parse: results identical to the
-    two filtered views, and neither side's plan re-runs the Python DOM
-    stage (the checkpointed blocks are the source)."""
-    rows = [
-        {"doc_id": f"doc{d:08d}",
-         "content": bytearray(htmlgen.build_html(
-             d, seed=SEED, variant=htmlgen.VARIANTS[d % 3]))}
-        for d in range(8)
-    ]
-    rows.append({"doc_id": "junk_bare_lt", "content": bytearray(b"if a < b then maybe")})
-    df = spark.createDataFrame(rows, schema="doc_id string, content binary")
+def test_html_full_frame_reads_each_file_once(spark, tmp_path):
+    """html_to_spans_full over a folder scan reads every payload ONCE:
+    the markup gate is a column, so healthy, gate-rejected and
+    parser-quarantined pages share one FileScan and one range Exchange
+    (no Union of a rejected branch re-reading the bytes), and each page
+    comes out as exactly one ledger row."""
+    from pdf_extract_spark.sources.folder import scan_html_folder
 
-    healthy, quarantine = bytepath.split(H.html_to_spans_full(df))
-    want_spans = {r["doc_id"]: r["spans"]
-                  for r in H.html_to_spans(df).collect()}
-    got_spans = {r["doc_id"]: r["spans"] for r in healthy.collect()}
-    assert got_spans == want_spans
-    errs = {r["doc_id"]: r["parse_error"] for r in quarantine.collect()}
-    assert set(errs) == {"junk_bare_lt"} and "no markup" in errs["junk_bare_lt"]
+    d = tmp_path / "pages"
+    d.mkdir()
+    for i in range(4):
+        (d / f"page_{i:03d}.html").write_bytes(
+            htmlgen.build_html(i, seed=SEED, variant=htmlgen.VARIANTS[i % 3]))
+    (d / "nomarkup.html").write_bytes(b"plain text only")
+    (d / "bare_lt.html").write_bytes(b"if a < b then maybe")
 
-    for side in (healthy, quarantine):
-        plan = side._jdf.queryExecution().executedPlan().toString()
-        assert "EvalPython" not in plan, plan
+    full = H.html_to_spans_full(scan_html_folder(spark, str(d)))
+    rows = full.collect()
+    plan = full._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("FileScan binaryFile") == 1, plan
+    assert "Union" not in final, plan
+    assert final.count("Exchange rangepartitioning") == 1, plan
+
+    ids = sorted(r["doc_id"] for r in rows)
+    assert ids == sorted([f"page_{i:03d}" for i in range(4)] + ["nomarkup", "bare_lt"])
+    errs = {r["doc_id"]: r["parse_error"] for r in rows if r["parse_error"] is not None}
+    assert set(errs) == {"nomarkup", "bare_lt"}
+    assert errs["nomarkup"].startswith("failed validation gate: ")
+    assert "no markup" in errs["bare_lt"]
+    assert all(r["spans"] is None for r in rows if r["doc_id"] in errs)
+    got = {r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"])
+                         for s in r["spans"]]
+           for r in rows if r["doc_id"] not in errs}
+    docs = []
+    for i in range(4):
+        doc = generator.make_document(i, seed=SEED)
+        doc["doc_id"] = f"page_{i:03d}"
+        docs.append(doc)
+    assert got == oracle.expected_corpus(docs)
 
 
 def test_lazy_loaded_images_keep_their_media_ref():

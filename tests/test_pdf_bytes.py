@@ -55,10 +55,10 @@ def test_spark_pdf_to_spans_matches_oracle(spark):
     rows.append({"doc_id": "bad2", "content": bytearray(b"")})
     df = spark.createDataFrame(rows, schema="doc_id string, content binary")
 
-    out = layout.pdf_to_spans(df)
+    out = layout.pdf_to_spans_full(df).collect()
     got = {
         r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]]
-        for r in out.collect()
+        for r in out if r["parse_error"] is None
     }
     assert "bad1" not in got and "bad2" not in got
     assert len(got) == N_DOCS
@@ -80,7 +80,7 @@ def test_layout_rules_applied(spark):
     ]
     df = spark.createDataFrame(rows, schema="doc_id string, content binary")
     spans = [
-        s for r in layout.pdf_to_spans(df).collect() for s in r["spans"]
+        s for r in layout.pdf_to_spans_full(df).collect() for s in r["spans"]
     ]
     texts = [s["text"] for s in spans]
     assert all("CONFIDENTIAL DRAFT" not in t for t in texts)
@@ -91,7 +91,7 @@ def test_corrupt_pdf_quarantined_not_fatal(spark):
     """A payload that passes the %PDF- magic but is corrupt mid-stream
     must become a parse_error row — NOT a task failure that kills the
     job — while healthy documents in the same batch extract normally."""
-    from pdf_extract_spark.operators import bytepath, layout as L
+    from pdf_extract_spark.operators import layout as L
     from pdf_extract_spark.sources import pdfgen
 
     good = bytes(pdfgen.build_pdf(0, seed=21))
@@ -108,24 +108,19 @@ def test_corrupt_pdf_quarantined_not_fatal(spark):
     ]
     df = spark.createDataFrame(rows, schema="doc_id string, content binary")
 
-    # the at-scale pattern: ONE parse, both views filtered from it
-    full = L.pdf_to_spans_full(df).persist()
-    try:
-        spans = {r["doc_id"] for r in bytepath.healthy_spans(full).collect()}
-        assert spans == {"ok"}
-        errs = {r["doc_id"]: r["parse_error"]
-                for r in bytepath.parse_error_rows(full).collect()}
-        # gate-rejected rows reconcile in the ledger too (input row
-        # counts must equal spans rows + error rows)
-        assert set(errs) == {"truncated", "garbage", "notpdf", "null"}
-        assert len(spans) + len(errs) == len(rows) == full.count()
-        assert "validation gate" in errs["notpdf"]
-        assert "validation gate" in errs["null"]
-        assert all(e for e in errs.values())
-    finally:
-        full.unpersist()
-    # convenience view over raw bytes agrees
-    assert {r["doc_id"] for r in L.pdf_to_spans(df).collect()} == {"ok"}
+    # the at-scale pattern: ONE parse, one ledgered frame
+    full = L.pdf_to_spans_full(df).collect()
+    spans = {r["doc_id"] for r in full if r["parse_error"] is None}
+    assert spans == {"ok"}
+    errs = {r["doc_id"]: r["parse_error"] for r in full if r["parse_error"] is not None}
+    # gate-rejected rows reconcile in the ledger too (input row
+    # counts must equal spans rows + error rows)
+    assert set(errs) == {"truncated", "garbage", "notpdf", "null"}
+    assert len(spans) + len(errs) == len(rows) == len(full)
+    assert "validation gate" in errs["notpdf"]
+    assert "validation gate" in errs["null"]
+    assert all(e for e in errs.values())
+    assert all(r["spans"] is None for r in full if r["doc_id"] in errs)
 
 
 def test_quarantine_reuses_parsed_prefix(monkeypatch):
@@ -154,28 +149,44 @@ def test_quarantine_reuses_parsed_prefix(monkeypatch):
         assert out["pages"][i] == pdfgen.expected_pages(d, seed=SEED)
 
 
-def test_pdf_split_parses_once_for_both_consumers(spark):
-    """bytepath.split over pdf_to_spans_full: healthy + quarantine from
-    ONE materialized parse — same results as the raw-bytes views, and
-    neither side's plan re-runs the Python parse stage."""
-    from pdf_extract_spark.operators import bytepath, layout as L
-    from pdf_extract_spark.sources import pdfgen
+def test_pdf_full_frame_reads_each_file_once(spark, tmp_path):
+    """pdf_to_spans_full over a folder scan reads every payload ONCE:
+    the gate is a column, so healthy, gate-rejected and parser-corrupt
+    files share one FileScan and one range Exchange (no Union of a
+    rejected branch re-reading the bytes), and each file comes out as
+    exactly one ledger row."""
+    from pdf_extract_spark.operators import layout as L
+    from pdf_extract_spark.sources.folder import scan_pdf_folder
 
-    rows = [{"doc_id": f"doc{d:08d}",
-             "content": bytearray(pdfgen.build_pdf(d, seed=7))}
-            for d in range(6)]
-    rows.append({"doc_id": "junk", "content": bytearray(b"%PDF-1.4 garbage")})
-    df = spark.createDataFrame(rows, schema="doc_id string, content binary")
+    d = tmp_path / "pdfs"
+    d.mkdir()
+    for i in range(4):
+        (d / f"doc_{i:03d}.pdf").write_bytes(pdfgen.build_pdf(i, seed=SEED))
+    good = pdfgen.build_pdf(0, seed=SEED)
+    (d / "zipped.pdf").write_bytes(b"PK\x03\x04zipfile")
+    (d / "truncated.pdf").write_bytes(good[: len(good) // 3])
 
-    healthy, quarantine = bytepath.split(L.pdf_to_spans_full(df))
-    want = {r["doc_id"]: r["spans"]
-            for r in L.pdf_to_spans(df).collect()}
-    assert {r["doc_id"]: r["spans"] for r in healthy.collect()} == want
-    errs = {r["doc_id"]: r["parse_error"] for r in quarantine.collect()}
-    assert set(errs) == {"junk"}
-    for side in (healthy, quarantine):
-        plan = side._jdf.queryExecution().executedPlan().toString()
-        assert "EvalPython" not in plan, plan
+    full = L.pdf_to_spans_full(scan_pdf_folder(spark, str(d)))
+    rows = full.collect()
+    plan = full._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("FileScan binaryFile") == 1, plan
+    assert "Union" not in final, plan
+    assert final.count("Exchange rangepartitioning") == 1, plan
+
+    ids = sorted(r["doc_id"] for r in rows)
+    assert ids == sorted([f"doc_{i:03d}" for i in range(4)] + ["zipped", "truncated"])
+    errs = {r["doc_id"]: r["parse_error"] for r in rows if r["parse_error"] is not None}
+    assert set(errs) == {"zipped", "truncated"}
+    assert errs["zipped"].startswith("failed validation gate: ")
+    assert errs["truncated"].startswith("PdfError: ")
+    tup = lambda spans: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans]
+    got = {r["doc_id"]: None if r["spans"] is None else tup(r["spans"]) for r in rows}
+    assert got == {
+        "zipped": None, "truncated": None,
+        **{f"doc_{i:03d}": tup(oracle.expected_spans_from_layout(
+            pdfgen.expected_pages(i, seed=SEED))) for i in range(4)},
+    }
 
 
 # ---------------------------------------------------------------------------
@@ -334,7 +345,7 @@ def test_encrypted_pdf_raises_not_garbage():
 def test_encrypted_pdf_quarantined_in_batch(spark):
     """The Spark path routes an encrypted file to a parse_error row
     carrying the reason while healthy siblings extract normally."""
-    from pdf_extract_spark.operators import bytepath, layout as L
+    from pdf_extract_spark.operators import layout as L
     from pdf_extract_spark.sources import pdfgen
 
     good = bytes(pdfgen.build_pdf(0, seed=33))
@@ -345,12 +356,8 @@ def test_encrypted_pdf_quarantined_in_batch(spark):
          {"doc_id": "enc", "content": bytearray(enc)}],
         schema="doc_id string, content binary",
     )
-    full = L.pdf_to_spans_full(df).persist()
-    try:
-        assert {r["doc_id"] for r in bytepath.healthy_spans(full).collect()} == {"ok"}
-        errs = {r["doc_id"]: r["parse_error"]
-                for r in bytepath.parse_error_rows(full).collect()}
-        assert set(errs) == {"enc"}
-        assert "encrypted" in errs["enc"]
-    finally:
-        full.unpersist()
+    full = L.pdf_to_spans_full(df).collect()
+    assert {r["doc_id"] for r in full if r["parse_error"] is None} == {"ok"}
+    errs = {r["doc_id"]: r["parse_error"] for r in full if r["parse_error"] is not None}
+    assert set(errs) == {"enc"}
+    assert "encrypted" in errs["enc"]

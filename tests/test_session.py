@@ -1,5 +1,6 @@
 """Session lifecycle: a second build_spark in the same process must not
-inherit UDFs bound to the first, stopped context."""
+inherit UDFs bound to the first, stopped context, and a session built
+without overrides gets one task slot per usable core."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 JOB = '''
+import os
 import sys
 sys.path.insert(0, sys.argv[1])
 from pdf_extract_spark import build_spark, generator
@@ -22,6 +24,13 @@ for _ in range(2):
     assert len(run_extraction(docs, 4).collect()) == 40
     spark.stop()
 print("TWO_SESSIONS_OK")
+
+# with neither override set, a third session defaults to every usable core
+os.environ.pop("SPARK_GRAFT_CPUS", None)
+os.environ.pop("SPARK_GRAFT_MASTER", None)
+spark = build_spark()
+print("DEFAULT_MASTER", spark.sparkContext.master)
+spark.stop()
 '''
 
 
@@ -39,3 +48,5 @@ def test_second_session_logs_no_accumulator_errors(tmp_path):
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert "TWO_SESSIONS_OK" in proc.stdout
     assert proc.stderr.count("Failed to update accumulator") == 0
+    # the default is what nproc prints, not a fixed slot count
+    assert f"DEFAULT_MASTER local[{len(os.sched_getaffinity(0))}]" in proc.stdout

@@ -4,9 +4,12 @@ from __future__ import annotations
 
 import os
 
-from pdf_extract_spark import oracle, sinks
-from pdf_extract_spark.sources import pdfgen
-from pdf_extract_spark.sources.folder import extract_pdf_folder, scan_pdf_folder
+import sys
+
+from pdf_extract_spark import generator, oracle, sinks
+from pdf_extract_spark.operators.layout import pdf_to_spans_full
+from pdf_extract_spark.sources import htmlgen, pdfgen
+from pdf_extract_spark.sources.folder import scan_pdf_folder
 
 N = 8
 SEED = 44
@@ -31,25 +34,78 @@ def test_scan_pdf_folder(spark, tmp_path):
     assert by_id["doc_000"] == pdfgen.build_pdf(0, seed=SEED)
 
 
+def _tuples(spans):
+    return [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans]
+
+
 def test_extract_pdf_folder_end_to_end(spark, tmp_path):
     folder = _write_pdfs(tmp_path)
-    got = {
-        r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]]
-        for r in extract_pdf_folder(spark, folder).collect()
-    }
-    assert "broken" not in got  # magic-header filter dropped it pre-parse
+    full = pdf_to_spans_full(scan_pdf_folder(spark, folder)).collect()
+    got = {r["doc_id"]: _tuples(r["spans"]) for r in full if r["parse_error"] is None}
+    assert "broken" not in got  # magic-header gate rejected it pre-parse
+    assert [r["doc_id"] for r in full if r["parse_error"] is not None] == ["broken"]
     assert len(got) == N
     for i in range(N):
-        exp = [
-            (s["kind"], s["text"], s["media_ref"], s["offset"])
-            for s in oracle.expected_spans_from_layout(pdfgen.expected_pages(i, seed=SEED))
-        ]
-        assert got[f"doc_{i:03d}"] == exp
+        exp = oracle.expected_spans_from_layout(pdfgen.expected_pages(i, seed=SEED))
+        assert got[f"doc_{i:03d}"] == _tuples(exp)
+
+
+def test_cli_folder_writes_ledger(spark, tmp_path, monkeypatch, capsys):
+    """``cli.py folder`` writes the ledgered frame: one row per scanned
+    file, healthy files with their spans, a truncated %PDF- file and a
+    zip named *.pdf with NULL spans and their quarantine reason, and the
+    counts on stdout. Runs in-process on the test session."""
+    import cli
+
+    d = tmp_path / "pdfs"
+    d.mkdir()
+    for i in range(3):
+        (d / f"doc_{i:03d}.pdf").write_bytes(pdfgen.build_pdf(i, seed=SEED))
+    good = pdfgen.build_pdf(0, seed=SEED)
+    (d / "truncated.pdf").write_bytes(good[: len(good) // 3])
+    (d / "zipped.pdf").write_bytes(b"PK\x03\x04zipfile")
+    html = tmp_path / "pages"
+    html.mkdir()
+    (html / "page_000.html").write_bytes(htmlgen.build_html(0, seed=SEED))
+    (html / "plain.html").write_bytes(b"no markup in this page")
+
+    # build_spark re-applies its SQL confs to the shared session
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        out = str(tmp_path / "pdf_out")
+        monkeypatch.setattr(sys, "argv", ["cli.py", "folder", "--input", str(d), "--output", out])
+        cli.main()
+        assert "3 extracted, 2 quarantined of 5 files" in capsys.readouterr().out
+        rows = {r["doc_id"]: r for r in spark.read.parquet(out).collect()}
+        assert len(rows) == 5
+        for i in range(3):
+            r = rows[f"doc_{i:03d}"]
+            exp = oracle.expected_spans_from_layout(pdfgen.expected_pages(i, seed=SEED))
+            assert r["parse_error"] is None and _tuples(r["spans"]) == _tuples(exp)
+        assert rows["truncated"]["spans"] is None
+        assert rows["truncated"]["parse_error"].startswith("PdfError: ")
+        assert rows["zipped"]["spans"] is None
+        assert rows["zipped"]["parse_error"].startswith("failed validation gate: ")
+
+        out = str(tmp_path / "html_out")
+        monkeypatch.setattr(sys, "argv", ["cli.py", "folder", "--input", str(html),
+                                          "--output", out, "--format", "html"])
+        cli.main()
+        assert "1 extracted, 1 quarantined of 2 files" in capsys.readouterr().out
+        rows = {r["doc_id"]: r for r in spark.read.parquet(out).collect()}
+        assert set(rows) == {"page_000", "plain"}
+        page = {**generator.make_document(0, seed=SEED), "doc_id": "page_000"}
+        assert rows["page_000"]["parse_error"] is None
+        assert _tuples(rows["page_000"]["spans"]) == oracle.expected_corpus([page])["page_000"]
+        assert rows["plain"]["spans"] is None
+        assert rows["plain"]["parse_error"].startswith("failed validation gate: ")
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", partitions)
 
 
 def test_sentence_sink_shape(spark, tmp_path):
     folder = _write_pdfs(tmp_path)
-    spans_out = extract_pdf_folder(spark, folder)
+    spans_out = pdf_to_spans_full(scan_pdf_folder(spark, folder))
     path = str(tmp_path / "sentences")
     sinks.write_sentences(spans_out, path, run_id="r42")
     rows = spark.read.parquet(path)
